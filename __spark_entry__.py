@@ -79,453 +79,333 @@ def _pipeline_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordering = the r5 rotation, applied by _R5_WINDOW at the end of
-    this function (the dict literal below keeps its r4 grouping and
-    per-entry commentary; the explicit list is what the driver sees).
-
-    The driver's correctness harness evaluates the FIRST 50 entries.
-    Rotation policy, applied per round:
-      tier 1 — every entry whose implementation OR oracle changed this
-               round, plus entries with no driver row yet;
-      tier 2 — the stalest green entries (last driver row oldest) fill
-               the remaining window slots;
-      tier 3 — freshly-proven entries (green last round) sit behind the
-               truncation line, where ageing is bounded by tier 2's
-               fill next round.
-
-    r5 instantiation (the plan VERDICT r4 "Next round" #2 queued;
-    the membership enumerated below is the MID-ROUND state — the
-    "Final r5 batch" paragraph at the end records the four late
-    swap-ins and their displacements, and _R5_WINDOW itself is
-    authoritative):
-    tier 1 = 16 changed-or-new (mm_ocr_text, ann_rrf_hybrid,
-    ann_ivf_pq_topk, ann_ivf_pq_recall, decontam_minhash,
-    mm_image_ahash, text_readability, graph_salsa NEW;
-    text_pii_scrub gained the Luhn/IP/id classes; embedding_kmeans
-    moved to the broadcast-table argmin; pagerank_link_graph dropped
-    the per-round checkpoint; dedup_minhash_lsh + dedup_incremental_lsh
-    build their indexes eagerly now; tokenizer_bpe_encode +
-    tokenizer_vocab_coverage share the re-tupled _encoded_word_counts
-    cache; search_rrf_fusion was refactored through _rrf_fuse)
-    + 7 late-r5 additions (dedup_semdedup, decontam_embedding,
-    ann_hamming_topk, ann_hamming_recall, stream_join_attribution,
-    quality_filter_fineweb, decontam_report)
-    + the 3 entries that have NEVER had a driver row
-    (stream_quantiles_logbin, dedup_lsh_exact_reps,
-    url_domain_etld1_dim), + the 2 displaced r2-row binary roundtrips
-    (pipeline_pdf_roundtrip, pipeline_warc_roundtrip) + the 2 r4
-    tier-1 overflows (dedup_embedding_keep_canonical,
-    pipeline_invoice_roundtrip) + the 9 newest additions
-    (search_phrase_topk, search_proximity_topk, search_snippet_topk,
-    collocations_pmi, dedup_bloom_probe, search_query_expansion,
-    search_spell_suggest, graph_triangle_count,
-    sketch_hll_merge_shards, text_zipf_fit, text_keyphrases,
-    langid_eval_confusion, search_autocomplete,
-    text_winnow_fingerprints, dedup_winnow_pairs,
-    graph_degree_powerlaw, mm_video_scene_cut, mm_audio_vad,
-    events_funnel, events_retention, events_markov_transitions) = 50
-    (tokenizer_vocab_coverage displaced — its r5 delta is the
-    value-neutral encode-cache tuple and tokenizer_bpe_encode, still
-    in-window, exercises the same path).
-    Final r5 batch: graph_kcore, sketch_kmv_intersect,
-    events_anomaly_mad and rfm_customer_segments enter at the window
-    head (new code first); search_proximity_topk, ann_hamming_recall,
-    decontam_report and search_snippet_topk rotate out — each a twin
-    whose changed path an in-window sibling still drives (see the
-    _R5_NEXT head notes). stream_anomaly_mad sits at position 51:
-    its oracle is the in-window events_anomaly_mad SQL verbatim and
-    pytest pins stream==batch row equality.
-    Tier 2 = 0 this round — the 15 newest additions filled the window;
-    all 36 r1/r2-row entries queue in _R5_NEXT,
-    stalest first. The 37 slices that did not fit
-    (tokenizer_vocab_coverage, pipeline_gzip_roundtrip,
-    pipeline_sections, pipeline_table_roundtrip, stream_events_daily,
-    dedup_exact, dedup_simhash, text_dup_fraction, dedup_ngram_jaccard,
-    dedup_embedding_cosine, dedup_embedding_lsh,
-    ann_cosine_topk, ann_ivf_topk, q1_pricing_summary,
-    agg_keyword_score_argmax,
-    window_sessionize, join_nation_region_rollup,
-    window_running_spend, join_semi_orders_with_items,
-    topk_parts_by_price,
-    window_top3_events_per_user, join_anti_customers_without_orders,
-    filter_events_window, filter_keyword_headers,
-    f_date_normalize, f_amount_normalize, f_lang_detect,
-    f_json_parse_fallback, agg_first3_events_per_user, f_doc_type_case,
-    f_clamp_score, union_head_tail, orders_page2 — pure projections
-    unchanged since r1/r2, local-sweep green — the names above are the
-    headline members; _R5_NEXT is the authoritative full order) sit at
-    positions 51-87;
-    every other entry has an r3 or r4 green row.
-    (The r4 instantiation this replaces is recorded in git history;
-    the dict literal below still carries its r4 tier grouping comments,
-    which _R5_WINDOW supersedes.)
-    """
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # ================= tier 1: changed or new in r4 =================
+    """Every driver query by name: fn(spark, sf_dir) -> DataFrame. Each
+    has an exact DuckDB twin under the same name in oracle_sql()."""
+    return {
         # Word documents: zip sniff -> word/document.xml paragraphs +
-        # body tables + core props with byte spans (new in r4 — fills
-        # the reference's pinned-but-unused python-docx branch)
+        # body tables + core props with byte spans (fills the
+        # reference's pinned-but-unused python-docx branch)
         "pipeline_docx_roundtrip": RDX.pipeline_docx_roundtrip,
         # full BM25 (k1/b + Lucene idf) via the integer-log table trick
         # proven in sketch_distinct_hll — length normalization with a
-        # bit-exact DuckDB twin, zero extra shuffles (new in r4)
+        # bit-exact DuckDB twin, zero extra shuffles
         "search_bm25_topk": SRCH.search_bm25_topk,
         # reciprocal-rank fusion of the tf-idf and BM25 top-K lists —
-        # integer-scaled RRF, consensus count per doc (new in r4d)
+        # integer-scaled RRF, consensus count per doc
         "search_rrf_fusion": SRCH.search_rrf_fusion,
         # hybrid retrieval: BM25 lexical list fused with the PQ-ADC
         # ANN list through the same integer RRF — the 100-TB shape
-        # search_rrf_fusion's docstring promised (new in r5)
+        # search_rrf_fusion's docstring promised
         "ann_rrf_hybrid": SRCH.ann_rrf_hybrid,
         # incremental inverted-index refresh: persisted base postings +
         # increment-only scan, merged df/N, top-K under the refreshed
-        # idf == batch rebuild (the twin IS the rebuild) (new in r4d)
+        # idf == batch rebuild (the twin IS the rebuild)
         "search_index_refresh": SRCH.search_index_refresh,
         # exact-phrase retrieval over a memoized positional index:
         # anchor-join (pos - offset) match, phrase tf * integer idf
-        # (new in r5)
         "search_phrase_topk": SRCH.search_phrase_topk,
         # result-page snippet generation: token window around the first
         # exact phrase occurrence, broadcast hit-list doc-store lookup
-        # (new in r5)
         "search_snippet_topk": SRCH.search_snippet_topk,
         # proximity "near" operator: term-pair co-occurrence within a
         # token window over the same positional postings, ranked by
-        # in-window pair count then tightest distance (new in r5)
+        # in-window pair count then tightest distance
         "search_proximity_topk": SRCH.search_proximity_topk,
         # pseudo-relevance-feedback query expansion: BM25 top-K as the
         # feedback set, expansion terms by feedback-tf x integer idf,
-        # everything past the ranker feedback-bounded (new in r5)
+        # everything past the ranker feedback-bounded
         "search_query_expansion": SRCH.search_query_expansion,
         # SymSpell spell suggestion: deletion-neighborhood equi-join
         # over the Heaps-bounded vocab index, levenshtein verify on
-        # candidates only (new in r5)
+        # candidates only
         "search_spell_suggest": SRCH.search_spell_suggest,
         # tokenizer-training corpus primitive: BPE merge-pair counts
-        # over the deduplicated vocabulary, corpus read once (new in r4)
+        # over the deduplicated vocabulary, corpus read once
         "tokenizer_bpe_pairs": TOK.tokenizer_bpe_pairs,
         # full iterative BPE training: BPE_ROUNDS greedy merge rounds,
         # fold-merge JVM-side, twin replays merges with replace-first
-        # recursive CTEs (new in r4)
+        # recursive CTEs
         "tokenizer_bpe_train": TOK.tokenizer_bpe_train,
         # the encode half of the tokenizer story: the trained merge
         # table applied per document — distinct words fold once
         # (Heaps-law sublinear), lengths join back Zipf-skew-split,
-        # per-doc token counts + chars/token compression (new in r4)
+        # per-doc token counts + chars/token compression
         "tokenizer_bpe_encode": TOK.tokenizer_bpe_encode,
         # per-language fertility/compression/fragmentation report under
         # the trained tokenizer — the multilingual merge-budget
-        # acceptance gate (new in r4d)
+        # acceptance gate
         "tokenizer_vocab_coverage": TOK.tokenizer_vocab_coverage,
         # mergeable log-binned quantile sketch — the constant-state
         # percentile path next to the exact agg_length_percentiles;
-        # bit-exact integer binning both engines (new in r4d)
+        # bit-exact integer binning both engines
         "sketch_quantiles_logbin": SK.sketch_quantiles_logbin,
         # Dolma-style Bloom-filter dedup membership: crawl increment
         # probes a mergeable bit_or bitmap over the base corpus'
-        # fingerprints, exact leg measures the FPR (new in r5)
+        # fingerprints, exact leg measures the FPR
         "dedup_bloom_probe": SK.dedup_bloom_probe,
         # HLL mergeability as a value-checked witness: per-shard
         # registers merged by max must equal the direct single-pass
-        # registers exactly (new in r5)
+        # registers exactly
         "sketch_hll_merge_shards": SK.sketch_hll_merge_shards,
         # theta-sketch set intersection over per-source shingle sets —
         # KMV algebra with the exact intersection as the measured
-        # witness (new in r5, final batch)
+        # witness
         "sketch_kmv_intersect": SK.sketch_kmv_intersect,
         # the rest of the theta algebra: union + both aNotB estimates
         # over the same sketches, exact sample-count identity emitted
-        # as a checked bit (new in r5, final batch)
+        # as a checked bit
         "sketch_kmv_setops": SK.sketch_kmv_setops,
         # k-core decomposition of the link graph — Batagelj-Zaversnik
         # peel as bounded localCheckpoint rounds; fixed-depth
-        # MATERIALIZED-CTE twin (new in r5, final batch)
+        # MATERIALIZED-CTE twin
         "graph_kcore": G.graph_kcore,
         # robust daily-volume anomaly detection — nearest-rank
-        # median/MAD Hampel rule, integer e6 z-scores (new in r5,
-        # final batch)
+        # median/MAD Hampel rule, integer e6 z-scores
         "events_anomaly_mad": TP.events_anomaly_mad,
         # measured IVF recall@K vs the exact baseline — the number the
-        # 100x-scale N_PROBE tuning conversation needs (new in r4)
+        # 100x-scale N_PROBE tuning conversation needs
         "ann_ivf_recall": SIM.ann_ivf_recall,
         # binary sign-quantization ANN: integer XOR+popcount Hamming
         # scan over the memoized 8-byte code table, exact-cosine rerank
-        # of BQ_CAND candidates — the memory tier below PQ (new in r5)
+        # of BQ_CAND candidates — the memory tier below PQ
         "ann_hamming_topk": SIM.ann_hamming_topk,
-        # the BQ honesty number, mirroring ann_ivf_recall (new in r5)
+        # the BQ honesty number, mirroring ann_ivf_recall
         "ann_hamming_recall": SIM.ann_hamming_recall,
         # real Lloyd k-means: driver-side bounded centroids, map-only
         # assignment, integer floor-div updates, per-round inertia
-        # (new in r4)
         "embedding_kmeans": SIM.embedding_kmeans,
         # product-quantization ANN: Lloyd-trained per-subspace
         # codebooks, map-only encoding, broadcast ADC lookup tables,
-        # order-free integer distance sums (new in r4)
+        # order-free integer distance sums
         "ann_pq_topk": SIM.ann_pq_topk,
         # PQ's honesty number as a driver-checked value, mirroring
-        # ann_ivf_recall (new in r4)
+        # ann_ivf_recall
         "ann_pq_recall": SIM.ann_pq_recall,
         # IVFADC: the IVF coarse quantizer prunes to the probed lists,
         # PQ/ADC scores only those lists' codes — the production
         # trillion-vector composition of the two paths above; the
         # memoized lists frame is FAISS's IVFPQ storage layout
-        # (new in r5)
         "ann_ivf_pq_topk": SIM.ann_ivf_pq_topk,
         # IVFADC's measured recall@K vs exact — per-query bounded above
-        # by the coarse path's recall, pinned by test (new in r5)
+        # by the coarse path's recall, pinned by test
         "ann_ivf_pq_recall": SIM.ann_ivf_pq_recall,
         # CCNet-style unigram-LM perplexity gate: hash-stable 20% train
         # slice, integer-ln cross-entropy, exact nearest-rank tertile
-        # head/middle/tail buckets (new in r4)
+        # head/middle/tail buckets
         "quality_perplexity_unigram": QL.quality_perplexity_unigram,
         # bigram-LM cross-entropy — one Markov order closer to CCNet's
-        # KenLM; both Zipf-keyed join-backs skew-split (new in r4)
+        # KenLM; both Zipf-keyed join-backs skew-split
         "quality_perplexity_bigram": QL.quality_perplexity_bigram,
         # interpolated Kneser-Ney on the same bigram tables — KenLM-
         # grade smoothing as exact integer fractions (d=3/4 rational),
-        # absolute discount + continuation backoff (new in r4)
+        # absolute discount + continuation backoff
         "quality_perplexity_kn": QL.quality_perplexity_kn,
         # within-doc unigram entropy (Gopher/Dolma degenerate-text
-        # signal), bit-exact via the same integer-ln table (new in r4)
+        # signal), bit-exact via the same integer-ln table
         "text_token_entropy": QL.text_token_entropy,
         # DCLM-style LEARNED quality classifier: multinomial NB trained
         # on provenance labels, integer log-likelihood-ratio score, no
-        # truncating division on negatives (new in r4)
+        # truncating division on negatives
         "quality_classifier_nb": QL.quality_classifier_nb,
         # PMI collocation mining over the one-scan bigram pair table —
         # the phrase-vocabulary-induction pass (integer-ln PMI, support
-        # floor, survivors-only marginal joins) (new in r5)
+        # floor, survivors-only marginal joins)
         "collocations_pmi": QL.collocations_pmi,
         # per-source Zipf exponent by integer-exact OLS over the
-        # top-64 rank/frequency log-log points (new in r5)
+        # top-64 rank/frequency log-log points
         "text_zipf_fit": QL.text_zipf_fit,
         # per-document TF-IDF keyphrase top-K — skew-split tf⋈df
-        # join-back, WindowGroupLimit per doc (new in r5)
+        # join-back, WindowGroupLimit per doc
         "text_keyphrases": QL.text_keyphrases,
         # trained-langid confusion matrix with integer-exact per-cell
-        # precision/recall against gold labels (new in r5)
+        # precision/recall against gold labels
         "langid_eval_confusion": TS.langid_eval_confusion,
         # prefix→top-K completion index over the vocabulary (the
-        # MostPopularCompletion QAC baseline) (new in r5)
+        # MostPopularCompletion QAC baseline)
         "search_autocomplete": SRCH.search_autocomplete,
         # MOSS winnowing fingerprints — per-window rightmost-min over
-        # k-gram hashes, zero-shuffle array plan (new in r5)
+        # k-gram hashes, zero-shuffle array plan
         "text_winnow_fingerprints": TS.text_winnow_fingerprints,
         # local-similarity near-dup pairs via shared winnowing
-        # fingerprints with the MOSS stop-fingerprint cap (new in r5)
+        # fingerprints with the MOSS stop-fingerprint cap
         "dedup_winnow_pairs": D.dedup_winnow_pairs,
         # in-degree power-law exponent over the pinned link graph —
-        # the graph-side sibling of text_zipf_fit (new in r5)
+        # the graph-side sibling of text_zipf_fit
         "graph_degree_powerlaw": G.graph_degree_powerlaw,
         # shot-boundary detection over the Y4M frame walk — adjacent-
-        # frame SAD with a measured threshold (new in r5)
+        # frame SAD with a measured threshold
         "mm_video_scene_cut": MM.mm_video_scene_cut_q,
         # energy-VAD segmentation over the WAV PCM — windows, rising-
-        # edge segment count, measured threshold (new in r5)
+        # edge segment count, measured threshold
         "mm_audio_vad": MM.mm_audio_vad_q,
         # ordered view→click→purchase conversion funnel with
-        # strictly-after semantics (new in r5)
+        # strictly-after semantics
         "events_funnel": R.events_funnel,
         # weekly retention cohort matrix — ISO-week cohorts, exact
-        # day-diff offsets, e6 retention vs week-0 size (new in r5)
+        # day-diff offsets, e6 retention vs week-0 size
         "events_retention": R.events_retention,
         # event-type transition matrix — one user-keyed lag window,
-        # |types|²-bounded aggregate, e6 row probabilities (new in r5)
+        # |types|²-bounded aggregate, e6 row probabilities
         "events_markov_transitions": R.events_markov_transitions,
         # RFM quintile segmentation over the orders fact table — the
         # warehouse customer-value rollup; rank-based tie-sharing
-        # scores, integer quintile arithmetic (new in r5, final batch)
+        # scores, integer quintile arithmetic
         "rfm_customer_segments": R.rfm_customer_segments,
         # held-out PR/F1 sweep over a fixed threshold grid — the
-        # measured operating curve for the learned gate (new in r4)
+        # measured operating curve for the learned gate
         "classifier_eval_pr": QL.classifier_eval_pr,
         # DSIR-shaped selection: hashed n-gram buckets make the whole
         # model a broadcast DSIR_B-row table — shuffle-free scoring,
-        # exact tie-broken keep quota (new in r4)
+        # exact tie-broken keep quota
         "sample_dsir_select": QL.sample_dsir_select,
         # per-source kept fraction + target-enrichment factor — the
         # measured number that says the resampling moved the mixture
-        # toward the target (new in r4)
+        # toward the target
         "dsir_eval_report": QL.dsir_eval_report,
         # TRAINED Cavnar-Trenkle n-gram language ID over all five gold
-        # labels, integer rank distances (new in r4)
+        # labels, integer rank distances
         "text_langid_ngram": TS.text_langid_ngram,
         # ftfy-style mojibake detect+repair: UTF-8-read-as-latin-1
-        # signature, byte-exact inverse transcode (new in r4)
+        # signature, byte-exact inverse transcode
         "text_fix_mojibake": TS.text_fix_mojibake,
         # registrable-domain (eTLD+1) extraction under PSL longest-match
         # semantics — the unit C4/RefinedWeb cap and mix by; pure
         # codegen projection, suffix table as broadcast-able literal
-        # (new in r4)
         "url_domain_etld1": TS.url_domain_etld1,
         # Unicode NFC canonicalization — Spark has no normalize
         # builtin, so this is a sanctioned Arrow-batched mapInPandas
         # (stdlib unicodedata) vs DuckDB's utf8proc nfc_normalize;
-        # decomposed fixture prefixes make every class fire (new in r4)
+        # decomposed fixture prefixes make every class fire
         "text_nfc_normalize": TS.text_nfc_normalize,
         # the data-repetition schedule (epochs per source under a
-        # smoothed token budget, LLaMA-table shape) (new in r4)
+        # smoothed token budget, LLaMA-table shape)
         "sample_mix_epochs": CU.sample_mix_epochs,
         # native Structured Streaming session windows, append-drained
         # with a sentinel flush; twin is the independent islands
-        # construction (new in r4)
+        # construction
         "stream_session_windows": SW.stream_session_windows,
         # stream-stream interval join (the attribution shape) — the
-        # last Structured Streaming join surface (new in r5)
+        # last Structured Streaming join surface
         "stream_join_attribution": SW.stream_join_attribution,
         # snapshot-atomic resume value-checked: three runs against a
         # growing pages dir — anti-join resume, idempotent no-op third
-        # run, lineage run_ids through the manifest (new in r4)
+        # run, lineage run_ids through the manifest
         "pipeline_resume_snapshot": RT.pipeline_resume_snapshot,
         # the publish side of the crawl loop: extraction exported as
         # WET conversion records (pure-SQL writer), re-ingested through
-        # the kernel record walker, byte-identical canon (new in r4)
+        # the kernel record walker, byte-identical canon
         "pipeline_wet_roundtrip": RT.pipeline_wet_roundtrip,
         # the CDX capture index over the WET export: per-record byte
         # offset + length via a bucket-keyed running sum — one ranged
-        # read per page instead of a stream scan (new in r4)
+        # read per page instead of a stream scan
         "warc_cdx_index": RT.warc_cdx_index,
         # the WAT side: passive anchor recorder in the HTML kernel —
         # every href form resolved RFC-3986-style against the page url,
-        # chrome links included (new in r4)
+        # chrome links included
         "extract_outlinks": LNK.extract_outlinks,
         # per-target in-link volume + dominant anchor text — the WAT
-        # aggregation behind anchor-text retrieval (new in r4)
+        # aggregation behind anchor-text retrieval
         "anchor_text_index": LNK.anchor_text_index,
         # robots.txt politeness gate over the discovered frontier:
         # generic parse + Google-spec longest-match, broadcast rules,
         # shuffle-free probe; twin rebuilds verdicts by arithmetic
-        # (new in r4)
         "filter_robots_gate": LNK.filter_robots_gate,
         # re-crawl change detection: fingerprint-keyed full outer
         # join over two crawl snapshots -> unchanged/changed/gone/new
         # verdicts that decide which fraction re-runs the kernels
-        # (new in r4)
         "crawl_delta_report": D.crawl_delta_report,
         # the crawl-loop capstone: discovered targets -> robots gate ->
         # seen anti-join -> in-link-ranked next wave; composes three
         # oracle-checked ops, composition itself value-checked
-        # (new in r4)
         "crawl_frontier_topk": LNK.crawl_frontier_topk,
         # politeness scheduling: gated unseen candidates assigned fetch
         # waves capped at WAVE_PER_HOST per host per wave — one window
-        # PARTITIONED BY HOST, no global sort (new in r4)
+        # PARTITIONED BY HOST, no global sort
         "crawl_schedule_waves": LNK.crawl_schedule_waves,
         # the other discovery channel: per-source sitemap urlsets built
         # from the corpus and parsed back (roundtrip contract), new
-        # URLs flagged, recrawl ranked by lastmod recency (new in r4)
+        # URLs flagged, recrawl ranked by lastmod recency
         "sitemap_discover": LNK.sitemap_discover,
         # snapshot compaction (small-files maintenance): N incremental
         # appends rewritten to one snapshot in one atomic commit,
         # lineage preserved, content + resume backlog value-checked
-        # (new in r4)
         "catalog_compact_roundtrip": RT.catalog_compact_roundtrip,
         # the north rule's lineage/metrics table value-checked: metrics
         # re-keyed on the deterministic size-bucket half of the skew
-        # key x content kind, two injected fault families (new in r4)
+        # key x content kind, two injected fault families
         "pipeline_metrics_report": RT.pipeline_metrics_report,
-        # multimodal: REWRITTEN in r4 to decode real containers (BMP
-        # 8bpp palettized incl. bottom-up rows, RIFF/WAV PCM with junk
-        # chunks, YUV4MPEG2) — synthetic TAG headers retired
+        # multimodal: decode real containers (BMP 8bpp palettized incl.
+        # bottom-up rows, RIFF/WAV PCM with junk chunks, YUV4MPEG2)
         "mm_image_features": MM.mm_image_features_q,
         # perceptual image near-dup: integer average-hash over the
         # decoded pixel grid, exact-bucket collapse with a canonical
         # keep/drop verdict — dedup_exact's shape on the multimodal
-        # column (new in r5)
+        # column
         "mm_image_ahash": MM.mm_image_ahash,
         "mm_frame_sample": MM.mm_frame_sample_q,
         "mm_audio_stats": MM.mm_audio_stats_q,
         # image -> TEXT recovery: the reference's declared-never-built
         # OCR branch filled — 5x7 bitmap-font render into the real
         # BMP/PNG containers, decoded back by template matching; the
-        # recovered text must hash-match the source (new in r5)
+        # recovered text must hash-match the source
         "mm_ocr_text": MM.mm_ocr_text_q,
-        # pointer-doubling components + banded LSH: the r3 rewrite's
-        # only direct driver rows tested the OLD code (VERDICT r3
-        # What's-wrong #1), and the r4 Pregel co-partition pin changed
-        # the iteration again — both MUST be inside the window
+        # near-dup clusters: pointer-doubling min-label components over
+        # the banded MinHash-LSH pair graph
         "dedup_connected_components": D.dedup_connected_components,
         "dedup_minhash_lsh": D.dedup_minhash_lsh,
         # the honesty number for the LSH family (same play as
         # ann_ivf_recall): measured recall vs the exhaustive
-        # inverted-index ground truth + candidate precision (new in r4)
+        # inverted-index ground truth + candidate precision
         "dedup_lsh_recall": D.dedup_lsh_recall,
-        # Pregel co-partition pin changed the iteration body (r4)
         "pagerank_link_graph": G.pagerank_link_graph,
         # SALSA hub/authority (degree-normalized HITS): per-edge
         # integer DIV is the normalization, mass bounded forever,
-        # two-sided Pregel co-partition pin (new in r5)
+        # two-sided Pregel co-partition pin
         "graph_salsa": G.graph_salsa,
         # Newman degree-mixing coefficient in its rational symmetric
-        # form — integer sums, sign-split e6 division, no sqrt (new in
-        # r5, final batch)
+        # form — integer sums, sign-split e6 division, no sqrt
         "graph_assortativity": G.graph_assortativity,
         # host-graph compression: doc edges -> (src_host, dst_host)
-        # weights + distinct linking docs (new in r5, final batch)
+        # weights + distinct linking docs
         "graph_host_edges": G.graph_host_edges,
         # personalized PageRank — seed-only teleport over the same
         # pinned edges; rank concentrates near seeds, non-reachable
-        # nodes stay at exact 0 (new in r5, final batch)
+        # nodes stay at exact 0
         "graph_ppr_seeds": G.graph_ppr_seeds,
         # per-node triangle counts + clustering coefficient via the
         # degree-oriented closure: exchange-free wedge self-join on the
-        # cached lo-pinned orientation, O(m^1.5) wedges (new in r5)
+        # cached lo-pinned orientation, O(m^1.5) wedges
         "graph_triangle_count": G.graph_triangle_count,
-        # composition that executes the changed components path
         "dedup_minhash_keep_canonical": CU.dedup_minhash_keep_canonical,
-        # search.py gained shared BM25 helpers this round
         "search_keyword_topk": SRCH.search_keyword_topk,
-        # kernels/html.py sniff_kind gained the docx zip branch (r4):
-        # the dispatch every page crosses, plus the xlsx zip path it
-        # rewrote
         "pipeline_main_text": _pipeline_main_text,
         "pipeline_xlsx_roundtrip": RX.pipeline_xlsx_roundtrip,
-        # -- the driver's 50-entry truncation line falls HERE --
-        # ========= tier 1 overflow (r3-green, indirectly covered) =======
-        # the SemDeDup composition's own logic is unchanged in r4; its
-        # r4 delta (the shared pointer-doubling labels helper) is
-        # exercised in-window by dedup_connected_components +
-        # dedup_minhash_keep_canonical, and its r3 driver row is green
         "dedup_embedding_keep_canonical": CU.dedup_embedding_keep_canonical,
-        # r3-green; its r4 delta (kernels/fields.py label table gained
-        # docx rows) is directly tested in-window by
-        # pipeline_docx_roundtrip — the invoice-specific spans are
-        # unchanged since its green r3 row
         "pipeline_invoice_roundtrip": RF.pipeline_invoice_roundtrip,
-        # new in r4d but born past the full window: the quantile sketch
-        # maintained as streaming state (3 arrival files, complete-mode
-        # bin histogram), decode == the batch sketch, SAME oracle SQL;
-        # locally driver-strength green + pytest-pinned equal to the
-        # batch op — leads r5's rotation with the pdf/warc roundtrips
+        # the quantile sketch maintained as streaming state (3 arrival
+        # files, complete-mode bin histogram), decode == the batch
+        # sketch, SAME oracle SQL; pytest-pinned equal to the batch op
         "stream_quantiles_logbin": SW.stream_quantiles_logbin,
         # the MAD anomaly rule over a continuously-maintained
         # complete-mode daily count — batch==stream equality is the
         # checked contract: the oracle is the batch twin's SQL
-        # verbatim (new in r5, final batch)
+        # verbatim
         "stream_anomaly_mad": SW.stream_anomaly_mad,
-        # r4d, also past the window: the hot-bucket graduation path
+        # the hot-bucket graduation path
         # (exact dedup first, LSH over one rep per exact group, star
         # edges restored) — labeling proven equal to plain
         # LSH+components, so its oracle IS the components twin
         "dedup_lsh_exact_reps": D.dedup_lsh_exact_reps,
-        # r4d: the eTLD+1 suffix table as a broadcast DIMENSION (the
+        # the eTLD+1 suffix table as a broadcast DIMENSION (the
         # full-PSL plan shape); output row-identical to the literal
         # variant, so its oracle IS the literal variant's twin
         "url_domain_etld1_dim": TS.url_domain_etld1_dim,
-        # =========== tier 3: stalest green (driver row = r2) ===========
-        # binary-container pipelines first (highest-complexity paths)
         "pipeline_pdf_roundtrip": RP.pipeline_pdf_roundtrip,
         "pipeline_warc_roundtrip": RT.pipeline_warc_roundtrip,
-        # (the eight tier-1 inserts this session — bpe_encode,
-        # lsh_recall, etld1, pq_recall, schedule_waves, sitemap,
-        # nfc, perplexity_kn — pushed gzip/sections/table_roundtrip/
-        # stream_events_daily and the r2-stale dedup quartet out; they
-        # lead the r5 rotation)
         "pipeline_gzip_roundtrip": RT.pipeline_gzip_roundtrip,
         "pipeline_sections": RT.pipeline_sections,
         "pipeline_table_roundtrip": RT.pipeline_table_roundtrip,
         "stream_events_daily": _stream_events_daily,
-        # dedup family (unchanged since r2 but two rounds stale)
         "dedup_exact": D.dedup_exact,
         "dedup_simhash": D.dedup_simhash,
         "text_dup_fraction": D.text_dup_fraction,
@@ -534,7 +414,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_lsh": SIM.dedup_embedding_lsh,
         "ann_cosine_topk": SIM.ann_cosine_topk,
         "ann_ivf_topk": SIM.ann_ivf_topk,
-        # relational core, r2-stale
         "q1_pricing_summary": R.q1_pricing_summary,
         "agg_keyword_score_argmax": R.agg_keyword_score_argmax,
         "window_running_spend": R.window_running_spend,
@@ -542,8 +421,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_nation_region_rollup": R.join_nation_region_rollup,
         "join_customer_orders": R.join_customer_orders,
         "agg_order_totals": R.agg_order_totals,
-        # ====== tier 3: behind the truncation line (position 51+) ======
-        # r2 leftovers nearest the line — r5 rotation picks these first
         "events_daily_metrics": R.events_daily_metrics,
         "agg_bool_checks": R.agg_bool_checks,
         "join_semi_orders_with_items": R.join_semi_orders_with_items,
@@ -561,11 +438,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "f_doc_type_case": R.f_doc_type_case,
         "union_head_tail": R.union_head_tail,
         "orders_page2": R.orders_page2,
-        # everything below earned a fresh green driver row in r3
         "text_token_stats": TS.text_token_stats,
         "text_quality_scores": TS.text_quality_scores,
         # Flesch-Kincaid readability as exact e4 fixed-point (per-term
-        # integer floors, DIV == //), scan-speed projection (new in r5)
+        # integer floors, DIV == //), scan-speed projection
         "text_readability": TS.text_readability,
         "text_langid": TS.text_langid,
         "text_fingerprint": TS.text_fingerprint,
@@ -574,7 +450,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonicalize": TS.url_canonicalize,
         "quality_filter_gopher": TS.quality_filter_gopher,
         # FineWeb custom filters (Penedo et al. 2024 §3.5) — the three
-        # line-structural rules on top of C4/Gopher (new in r5)
+        # line-structural rules on top of C4/Gopher
         "quality_filter_fineweb": TS.quality_filter_fineweb,
         "agg_column_profile": R.agg_column_profile,
         "agg_rollup_category": R.agg_rollup_category,
@@ -593,17 +469,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the fuzzy decontamination leg: near-dup matching against the
         # benchmark slice through the shared MinHash/LSH band index —
         # catches paraphrased eval leakage exact windows miss
-        # (new in r5)
         "decontam_minhash": CU.decontam_minhash,
-        # the composed 3-leg contamination verdict (new in r5)
+        # the composed 3-leg contamination verdict
         "decontam_report": CU.decontam_report,
         # the EMBEDDING decontamination leg: cosine against the
         # broadcast benchmark slice — catches rewritten eval items that
-        # share no surface n-grams (new in r5)
+        # share no surface n-grams
         "decontam_embedding": CU.decontam_embedding,
         # SemDeDup: semantic dedup scoped to the memoized IVF clusters —
         # within-cluster pairs only, min-id keep-first verdict per
-        # vector (new in r5)
+        # vector
         "dedup_semdedup": SIM.dedup_semdedup,
         "sample_domain_cap": CU.sample_domain_cap,
         "dedup_lines_global": CU.dedup_lines_global,
@@ -626,186 +501,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sketch_distinct_kmv": SK.sketch_distinct_kmv,
         "sample_hash_stable": SK.sample_hash_stable,
     }
-    prefix = _R5_WINDOW + _R5_NEXT
-    missing = [n for n in prefix if n not in q]
-    assert not missing, f"rotation names absent from queries(): {missing}"
-    assert len(_R5_WINDOW) == len(set(prefix)) - len(_R5_NEXT) == 50
-    ordered = {n: q[n] for n in prefix}
-    ordered.update((n, f) for n, f in q.items() if n not in ordered)
-    return ordered
-
-
-# The first 50 entries the driver checks this round — see the queries()
-# docstring for the tier derivation. Order within a tier: highest-risk
-# first (new ops, then changed plans, then value-neutral code changes,
-# then never-checked, displaced, overflow, and stalest greens).
-_R5_WINDOW = [
-    # -- tier 1: new in r5, final batch (k-core peel, theta-sketch
-    # intersection, MAD anomaly rule) — new code leads the window;
-    # each displaced one TWIN whose changed path an in-window sibling
-    # still exercises (see the _R5_NEXT head notes) --
-    "graph_kcore",
-    "sketch_kmv_intersect",
-    "events_anomaly_mad",
-    "rfm_customer_segments",
-    # -- tier 1: new in r5 --
-    "search_phrase_topk",
-    "collocations_pmi",
-    "dedup_bloom_probe",
-    "search_query_expansion",
-    "search_spell_suggest",
-    "graph_triangle_count",
-    "sketch_hll_merge_shards",
-    "text_zipf_fit",
-    "text_keyphrases",
-    "langid_eval_confusion",
-    "search_autocomplete",
-    "text_winnow_fingerprints",
-    "dedup_winnow_pairs",
-    "graph_degree_powerlaw",
-    "mm_video_scene_cut",
-    "mm_audio_vad",
-    "events_funnel",
-    "events_retention",
-    "events_markov_transitions",
-    "ann_hamming_topk",
-    "stream_join_attribution",
-    "quality_filter_fineweb",
-    "dedup_semdedup",
-    "decontam_embedding",
-    "mm_ocr_text",
-    "ann_rrf_hybrid",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_recall",
-    "decontam_minhash",
-    "mm_image_ahash",
-    "text_readability",
-    "graph_salsa",
-    # -- tier 1: changed in r5 --
-    "text_pii_scrub",
-    "embedding_kmeans",
-    "pagerank_link_graph",
-    "dedup_incremental_lsh",
-    "dedup_minhash_lsh",
-    "tokenizer_bpe_encode",
-    "search_rrf_fusion",
-    # -- tier 1: never driver-checked (born past the r4 window) --
-    "stream_quantiles_logbin",
-    "dedup_lsh_exact_reps",
-    "url_domain_etld1_dim",
-    # -- tier 1: displaced r2 rows + r4 overflows --
-    "pipeline_pdf_roundtrip",
-    "pipeline_warc_roundtrip",
-    "dedup_embedding_keep_canonical",
-    "pipeline_invoice_roundtrip",
-    # -- tier 2: stalest r1/r2 greens (33 of 36) --
-]
-
-# positions 51-59: the r1/r2-green scalar slices the 50-slot window
-# could not hold once the six new r5 tier-1 entries (IVFADC pair,
-# decontam_minhash, mm_image_ahash, text_readability, graph_salsa)
-# joined (all unchanged since r1/r2, local-sweep green) — first in
-# line should the window ever widen
-_R5_NEXT = [
-    # position 51 — new r5 code shipping one slot past the window, the
-    # strongest possible out-of-window case: its oracle IS the
-    # in-window events_anomaly_mad SQL verbatim (batch==stream is the
-    # checked contract), pytest pins stream==batch row equality, and
-    # the local driver-strength gate passes. Leads the next fill.
-    "stream_anomaly_mad",
-    # positions 52-53 — the last two r5 additions, past a window
-    # already full of promised new-code slots; shipping on the local
-    # driver-strength gate (same canonicalization as the driver) +
-    # full-semantics Python replay pins, documented rather than
-    # silently displacing promised entries. Both ride the in-window-
-    # exercised _graph_pins machinery; graph_assortativity shares the
-    # und/degree construction driver-checked via graph_kcore.
-    "graph_assortativity",
-    "graph_host_edges",
-    # position 54 — personalized PageRank: the ITERATION is the
-    # in-window-exercised pagerank_link_graph plan verbatim (same
-    # pins, same integer update, same lazy-lineage carry); the delta
-    # is the seed-gated teleport term, replay-pinned in pytest
-    "graph_ppr_seeds",
-    # position 55 — theta-algebra completion: shares the literal
-    # _kmv_sketch_parts code (memoized set, thetas, retained samples)
-    # with in-window sketch_kmv_intersect; the new set operations are
-    # replay-pinned and carry the exact sample-count identity bit
-    "sketch_kmv_setops",
-    # displaced by rfm_customer_segments: search_snippet_topk's new
-    # machinery is the shared phrase ranking, in-window via
-    # search_phrase_topk; the snippet-specific tail (first-occurrence
-    # window + broadcast doc-store lookup) is pytest-pinned and
-    # local-sweep green
-    "search_snippet_topk",
-    # displaced by the final-batch trio (graph_kcore,
-    # sketch_kmv_intersect, events_anomaly_mad) under the
-    # new-code-first policy — each a TWIN whose code path stays
-    # driver-exercised by an in-window sibling:
-    #   search_proximity_topk — probes the SAME memoized positional
-    #     postings index as in-window search_phrase_topk (the r5 delta
-    #     is the shared index build);
-    #   ann_hamming_recall — the recall harness over in-window
-    #     ann_hamming_topk's code table, same shape as in-window
-    #     ann_ivf_pq_recall;
-    #   decontam_report — a bounded rollup COMPOSED of in-window
-    #     decontam_minhash + decontam_embedding legs.
-    # All three pass the local driver-strength sweep this round.
-    "search_proximity_topk",
-    "ann_hamming_recall",
-    "decontam_report",
-    # displaced last by events_markov_transitions: its r5 change is the
-    # value-neutral encode-cache tuple, and tokenizer_bpe_encode (still
-    # in-window) exercises the same changed path — lowest-risk eviction
-    # under the new-ops-first policy
-    "tokenizer_vocab_coverage",
-    # displaced from tier 2 by the positional-retrieval pair, the
-    # PMI collocation miner and the Bloom dedup probe (newest r5
-    # entries): r1-green slices, local-sweep green, first in line
-    # for the next fill
-    "pipeline_gzip_roundtrip",
-    "pipeline_sections",
-    "pipeline_table_roundtrip",
-    "stream_events_daily",
-    "dedup_exact",
-    "dedup_simhash",
-    "text_dup_fraction",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "q1_pricing_summary",
-    "agg_keyword_score_argmax",
-    "window_sessionize",
-    "join_nation_region_rollup",
-    "join_customer_orders",
-    "agg_order_totals",
-    "events_daily_metrics",
-    "agg_bool_checks",
-    # displaced from tier 2 by the five late-r5 ops (dedup_semdedup,
-    # decontam_embedding, ann_hamming_topk, ann_hamming_recall,
-    # stream_join_attribution, quality_filter_fineweb,
-    # decontam_report):
-    # r1/r2-green scalar projections and window slices, local-sweep
-    # green, queued first for r6's fill
-    "window_running_spend",
-    "join_semi_orders_with_items",
-    "topk_parts_by_price",
-    "window_top3_events_per_user",
-    "join_anti_customers_without_orders",
-    "filter_events_window",
-    "filter_keyword_headers",
-    "f_date_normalize",
-    "f_amount_normalize",
-    "f_lang_detect",
-    "f_json_parse_fallback",
-    "agg_first3_events_per_user",
-    "f_doc_type_case",
-    "f_clamp_score",
-    "union_head_tail",
-    "orders_page2",
-]
 
 
 def oracle_sql() -> dict[str, str]:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import clear_caches, memo  # noqa: F401 — clear_caches re-exported
 from ..functions import text as TX
 from ..functions import vectors as V
 
@@ -48,49 +49,6 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).repartition(par, F.col("doc_id"))
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}  # persisted intermediates per (session, sf_dir, kind)
-
-
-def clear_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist and evict memoized tables (shingles, digests, simhash,
-    SRP signatures, IVF index, component labels). With a session, only
-    entries keyed to THAT session's applicationId are evicted; with
-    None, everything goes. Note the scoping is bookkeeping, not
-    isolation: PySpark runs one SparkContext per process, so every
-    live SparkSession here shares one applicationId — entries under a
-    DIFFERENT applicationId belong to a stopped context and are purged
-    lazily by _cache_key anyway. Long-lived sessions that touch many
-    sf_dirs should call this between datasets. Returns the number of
-    evicted entries. The components entry is localCheckpoint-ed (not
-    cached), so its unpersist() here is a no-op — dropping the dict
-    reference is what lets the ContextCleaner free its blocks."""
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    n = 0
-    for key in list(_SHINGLE_CACHE):
-        if app_id is not None and key[0] != app_id:
-            continue
-        entry = _SHINGLE_CACHE.pop(key)
-        for df in entry if isinstance(entry, tuple) else (entry,):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped: JVM-side storage is gone
-        n += 1
-    return n
-
-
-def _cache_key(spark: SparkSession, *parts) -> tuple:
-    """Cache key rooted in the stable applicationId, not id(spark): a
-    recycled id() after session GC would hand back DataFrames bound to a
-    dead session. A new application also invalidates all prior entries,
-    so stale persisted frames can't leak across sessions."""
-    app_id = spark.sparkContext.applicationId
-    stale = [k for k in _SHINGLE_CACHE if k[0] != app_id]
-    for k in stale:
-        _SHINGLE_CACHE.pop(k, None)  # dead session: JVM-side storage is gone
-    return (app_id, *parts)
-
-
 def _shingle_table(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     """Unpersisted (doc_id, shd) plan — the ONE definition of shingle
     construction, shared by _shingled and the minhash digest table so
@@ -109,20 +67,7 @@ def _shingled(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     ONE cached table instead of leaking a new persist() each time. The
     cache barrier also keeps the downstream 12-signature codegen small
     (see dedup_minhash_lsh docstring)."""
-    key = _cache_key(spark, sf_dir, n)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        df = _shingle_table(spark, sf_dir, n).persist()
-        # Eager build (the cb.count() pattern): a lazily-persisted frame
-        # whose first consumers are CONCURRENT stages (verify joins read
-        # sa+sb, AQE submits independent subtrees together) gets its
-        # cache blocks computed redundantly by each racing stage — the
-        # cold wall time then depends on scheduling luck (measured
-        # 2.9s-17s swings for dedup_incremental_lsh at sf0.1).
-        # Materializing at build makes cold = build + probe, once each.
-        df.count()
-        _SHINGLE_CACHE[key] = df
-    return df
+    return memo(spark, sf_dir, n, lambda: _shingle_table(spark, sf_dir, n))
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -151,30 +96,24 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted+memoized narrow band table (doc_id, band_idx,
     band_hash) — the LSH index shared by dedup_minhash_lsh and the
     incremental variant (see dedup_minhash_lsh's docstring for why the
-    NARROW table is the one worth caching/checkpointing)."""
-    key = _cache_key(spark, sf_dir, "minhash_bands")
-    banded = _SHINGLE_CACHE.get(key)
-    if banded is None:
+    NARROW table is the one worth caching/checkpointing). The LSH
+    bucket join reads it from BOTH sides (a/b aliases)."""
+
+    def build() -> DataFrame:
         dig = TX.minhash_digests(F.col("shd"))
         sigs = [TX.minhash_component(dig, i) for i in range(TX.MINHASH_K)]
         bands = F.array(
             *[TX.lsh_band_hash(sigs, b) for b in range(TX.LSH_BANDS)]
         )
-        banded = (
+        return (
             _shingle_table(spark, sf_dir, 3)
             .select(
                 "doc_id", F.posexplode(bands).alias("band_idx", "band_hash")
             )
             .filter(F.col("band_hash").isNotNull())
-            .persist()
         )
-        # Eager: the LSH bucket join reads this index from BOTH sides
-        # (a/b aliases) — left lazy, the two concurrent join-input
-        # stages each recompute the band build cold (see _shingled).
-        # "Build the index, then probe" is also the honest 100-TB shape.
-        banded.count()
-        _SHINGLE_CACHE[key] = banded
-    return banded
+
+    return memo(spark, sf_dir, "minhash_bands", build)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,14 +182,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banding projection references `simhash` five times (posexplode
     bytes + carry), and without the cache barrier CollapseProject
     inlines the 32-lane aggregate into every reference."""
-    key = _cache_key(spark, sf_dir, "simhash")
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        docs = _docs_wide(spark, sf_dir)
-        sh = docs.select(
+    sh = memo(
+        spark,
+        sf_dir,
+        "simhash",
+        lambda: _docs_wide(spark, sf_dir).select(
             "doc_id", TX.simhash32(TX.tokens(F.col("text"))).alias("simhash")
-        ).persist()
-        _SHINGLE_CACHE[key] = sh
+        ),
+    )
     byte_of = lambda b: F.shiftright(F.col("simhash"), 8 * b).bitwiseAND(F.lit(255))
     banded = sh.select(
         "doc_id",
@@ -461,17 +400,13 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12 rows the refinement is large-star/small-star pointer doubling
     (O(log n) rounds), same per-round plan. Driver-side state is one
     scalar count per round — no collect of data rows."""
-    key = _cache_key(spark, sf_dir, "components")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    docs = _docs(spark, sf_dir).select("doc_id")
-    labels = connected_components_labels(docs, pairs)
-    # memoized (and thus clear_caches-evictable): the final labels stay
-    # persisted for reuse instead of leaking one persist per call
-    _SHINGLE_CACHE[key] = labels
-    return labels
+
+    def build() -> DataFrame:
+        pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+        docs = _docs(spark, sf_dir).select("doc_id")
+        return connected_components_labels(docs, pairs)
+
+    return memo(spark, sf_dir, "components", build)
 
 
 def connected_components_labels(
@@ -674,21 +609,19 @@ def _span_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation.decontam_ngram_overlap, so the tokenize -> shingle -> md5
     -> posexplode pipeline runs once per dataset (9.9s -> ~1s warm at
     sf0.1)."""
-    key = _cache_key(spark, sf_dir, "spanwin", SPAN_W)
-    win = _SHINGLE_CACHE.get(key)
-    if win is None:
-        wide = _docs_wide(spark, sf_dir)
+
+    def build() -> DataFrame:
         tok = TX.tokens(F.col("text"))
-        win = (
-            wide.select(
+        return (
+            _docs_wide(spark, sf_dir)
+            .select(
                 "doc_id",
                 F.posexplode(TX.word_shingles(tok, SPAN_W)).alias("pos", "sh"),
             )
             .select("doc_id", "pos", TX.md5_hex(F.col("sh")).alias("h"))
-            .persist()
         )
-        _SHINGLE_CACHE[key] = win
-    return win
+
+    return memo(spark, sf_dir, f"spanwin-{SPAN_W}", build)
 
 
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,33 +977,25 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffles, both map-side combined; the stop-fingerprint cap
     bounds every bucket's pair fan-out. At 10^12 docs the posting
     table IS the stored fingerprint index (same increment path as the
-    LSH band index) — so it is memoized in _SHINGLE_CACHE and built
-    EAGERLY like the other persisted indexes: the posting frame has
-    THREE consumers in one action (n_fp rollup, bucket count, pair
-    join both sides), and left bare that re-ran the whole k-gram
-    md5 winnowing chain per consumer (measured 10.8s warm at sf0.1 →
-    2.0s memoized; the eager .count() prevents the racing-stage
-    recompute dedup_incremental_lsh documents).
+    LSH band index) — so it goes through cache.memo like the other
+    persisted indexes: the posting frame has THREE consumers in one
+    action (n_fp rollup, bucket count, pair join both sides), and left
+    bare that re-ran the whole k-gram md5 winnowing chain per consumer
+    (measured 10.8s warm at sf0.1 → 2.0s memoized).
     """
     from .textstats import _winnow_fp_frame
 
-    key = _cache_key(spark, sf_dir, "winnow-posts")
-    dh = _SHINGLE_CACHE.get(key)
-    if dh is None:
-        dh = (
-            _winnow_fp_frame(spark, sf_dir)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.array_distinct(
-                        F.transform(F.col("fps"), lambda x: x["h"])
-                    )
-                ).alias("h"),
-            )
-            .persist()
-        )
-        dh.count()
-        _SHINGLE_CACHE[key] = dh
+    dh = memo(
+        spark,
+        sf_dir,
+        "winnow-posts",
+        lambda: _winnow_fp_frame(spark, sf_dir).select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(F.transform(F.col("fps"), lambda x: x["h"]))
+            ).alias("h"),
+        ),
+    )
     nfp = dh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fp")
     )

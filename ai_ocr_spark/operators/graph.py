@@ -60,6 +60,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo
+
 PR_ITERS = 5
 PR_UNIT = 10**12
 PR_BASE = (15 * PR_UNIT) // 100
@@ -90,31 +92,24 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _graph_pins(spark: SparkSession, sf_dir: str) -> tuple:
     """The Pregel co-partition pin both link-analysis operators share:
     nodes hash-pinned on doc_id, edges (with outdeg) on src, both at
-    the session's shuffle width, persisted + MEMOIZED + materialized
-    eagerly (_SHINGLE_CACHE policy — the r4 shape persisted these
-    inside each operator and unpersisted them before the caller's
-    action ever ran, so every run rebuilt the edge table's distinct +
-    outdeg join from the scan). At 10^12 edges this pair is the
-    partitioned graph index a cluster checkpoints once and every
-    power-iteration consumer (PageRank, SALSA, components) reuses."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
+    the session's shuffle width, memoized through cache.memo (the r4
+    shape persisted these inside each operator and unpersisted them
+    before the caller's action ever ran, so every run rebuilt the edge
+    table's distinct + outdeg join from the scan). At 10^12 edges this
+    pair is the partitioned graph index a cluster checkpoints once and
+    every power-iteration consumer (PageRank, SALSA, components)
+    reuses."""
 
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = _cache_key(spark, sf_dir, "graph-pins")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(par, "doc_id")
-        .persist()
-    )
-    e_src = _edges(spark, sf_dir).repartition(par, "src").persist()
-    docs.count()  # eager: lazy memoized persists race (CLAUDE.md)
-    e_src.count()
-    _SHINGLE_CACHE[key] = (docs, e_src)
-    return docs, e_src
+    def build() -> tuple:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        docs = (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id")
+            .repartition(par, "doc_id")
+        )
+        return docs, _edges(spark, sf_dir).repartition(par, "src")
+
+    return memo(spark, sf_dir, "graph-pins", build)
 
 
 def pagerank_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,8 +231,8 @@ def graph_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     auth vector, which has TWO consumers (the last hub half-step and
     the output join): left bare, the whole 2*SALSA_ITERS-join chain
     executed twice per action (measured 8.2s median / 14s max at
-    sf0.1). It is therefore persisted and materialized eagerly, and
-    the pins + final auth are memoized in _SHINGLE_CACHE like every
+    sf0.1). It is therefore persisted and materialized eagerly: the
+    pins + final auth are memoized through cache.memo like every
     other index artifact (the r4 shape unpersisted the pins before
     the caller's action ever ran, so all three were no-ops and every
     run rebuilt the edge tables from the scan). At 10^12 edges the
@@ -246,13 +241,10 @@ def graph_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The DuckDB twin unrolls the same SALSA_ITERS rounds as chained
     CTEs over the identical arithmetic edge set — bit-for-bit."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs, e_src = _graph_pins(spark, sf_dir)
-    key = _cache_key(spark, sf_dir, "salsa")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
+
+    def build() -> tuple:
         # dst-pinned twin derives FROM the cached src pin (indeg
         # aggregate included), never re-running the edge build's
         # distinct + outdeg join from the scan
@@ -263,7 +255,6 @@ def graph_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
             e_src.select("src", "dst")
             .join(indeg, "dst")
             .repartition(par, "dst")
-            .persist()
         )
         # intermediate rounds skip the zero-fill docs join: a node
         # absent from an aggregate carries exactly the mass its 0-fill
@@ -300,16 +291,10 @@ def graph_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id",
                 F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("v"),
             )
-            .persist()
         )
-        # eager, dependency order: lazy memoized persists race when the
-        # first action submits concurrent join-input stages (CLAUDE.md);
-        # docs/e_src were already materialized by _graph_pins
-        e_dst.count()
-        auth.count()
-        _SHINGLE_CACHE[key] = (e_dst, auth)
-    else:
-        e_dst, auth = cached
+        return e_dst, auth
+
+    e_dst, auth = memo(spark, sf_dir, "salsa", build)
     h_raw = (
         e_dst.join(auth.select(F.col("doc_id").alias("dst"), "v"), "dst")
         .select("src", F.expr("v DIV indeg").alias("c"))
@@ -395,50 +380,43 @@ def _tri_oriented(spark: SparkSession, sf_dir: str) -> tuple:
     is bounded by O(sqrt(m)), so wedge generation is O(m^1.5) total
     instead of sum(deg^2) — the difference between feasible and not on
     a power-law web graph whose max degree is ~N."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = _cache_key(spark, sf_dir, "tri-oriented")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _, e_src = _graph_pins(spark, sf_dir)
-    und = (
-        e_src.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    def build() -> tuple:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        _, e_src = _graph_pins(spark, sf_dir)
+        und = (
+            e_src.select(
+                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .repartition(par, "node")
-        .persist()
-    )
-    o = (
-        und.join(
-            deg.select(F.col("node").alias("a"), F.col("deg").alias("dega")), "a"
+        deg = (
+            und.select(F.col("a").alias("node"))
+            .unionAll(und.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+            .repartition(par, "node")
         )
-        .join(
-            deg.select(F.col("node").alias("b"), F.col("deg").alias("degb")), "b"
+        o = (
+            und.join(
+                deg.select(F.col("node").alias("a"), F.col("deg").alias("dega")), "a"
+            )
+            .join(
+                deg.select(F.col("node").alias("b"), F.col("deg").alias("degb")), "b"
+            )
+            .select(
+                F.when(F.col("dega") <= F.col("degb"), F.col("a"))
+                .otherwise(F.col("b"))
+                .alias("lo"),
+                F.when(F.col("dega") <= F.col("degb"), F.col("b"))
+                .otherwise(F.col("a"))
+                .alias("hi"),
+            )
+            .repartition(par, "lo")
         )
-        .select(
-            F.when(F.col("dega") <= F.col("degb"), F.col("a"))
-            .otherwise(F.col("b"))
-            .alias("lo"),
-            F.when(F.col("dega") <= F.col("degb"), F.col("b"))
-            .otherwise(F.col("a"))
-            .alias("hi"),
-        )
-        .repartition(par, "lo")
-        .persist()
-    )
-    deg.count()  # eager: lazy memoized persists race (CLAUDE.md)
-    o.count()
-    _SHINGLE_CACHE[key] = (deg, o)
-    return deg, o
+        return deg, o
+
+    return memo(spark, sf_dir, "tri-oriented", build)
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,15 +727,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     alive = nodes
     removed: DataFrame | None = None
     for r in range(1, KCORE_ROUNDS + 1):
-        dege = (
-            und.select(F.col("a").alias("doc_id"))
-            .union(und.select(F.col("b").alias("doc_id")))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        deg = alive.join(dege, "doc_id", "left").select(
-            "doc_id", F.coalesce("deg", F.lit(0)).alias("deg")
-        )
+        deg = _kcore_degrees(alive, und)
         bad = deg.filter(F.col("deg") < KCORE_K).localCheckpoint()
         if bad.count() == 0:
             break  # fixpoint — the twin's remaining unrolled rounds no-op
@@ -777,19 +747,35 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(bad_ids.withColumnRenamed("doc_id", "b"), "b", "left_anti")
             .localCheckpoint()
         )
-    dege_f = (
+    else:
+        # every round peeled: unless the graph is now at its fixpoint,
+        # returning would silently truncate the peel (and diverge from
+        # the fixed-depth twin, which stops at the same depth)
+        if _kcore_degrees(alive, und).filter(F.col("deg") < KCORE_K).count():
+            raise RuntimeError(
+                f"k-core peel did not converge within {KCORE_ROUNDS} rounds"
+            )
+    core = _kcore_degrees(alive, und).select(
+        "doc_id",
+        F.lit(0).cast("long").alias("peel_round"),
+        F.col("deg").cast("long").alias("deg_at_peel"),
+        F.lit(True).alias("in_core"),
+    )
+    return core if removed is None else core.unionByName(removed)
+
+
+def _kcore_degrees(alive: DataFrame, und: DataFrame) -> DataFrame:
+    """(doc_id, deg): each alive node's degree in the remaining
+    undirected edge set, 0 for nodes with no edge left."""
+    dege = (
         und.select(F.col("a").alias("doc_id"))
         .union(und.select(F.col("b").alias("doc_id")))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    core = alive.join(dege_f, "doc_id", "left").select(
-        "doc_id",
-        F.lit(0).cast("long").alias("peel_round"),
-        F.coalesce("deg", F.lit(0)).cast("long").alias("deg_at_peel"),
-        F.lit(True).alias("in_core"),
+    return alive.join(dege, "doc_id", "left").select(
+        "doc_id", F.coalesce("deg", F.lit(0)).alias("deg")
     )
-    return core if removed is None else core.unionByName(removed)
 
 
 def _kcore_oracle() -> str:

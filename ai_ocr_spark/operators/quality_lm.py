@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..functions import text as TX
 from .search import BM25_PREC as PREC
 from .search import _iln_sql
@@ -709,24 +710,15 @@ def _bigram_lm_tables(
     index, shared by quality_perplexity_bigram AND the Kneser-Ney
     scorer: each skew-split join's hot/cold lanes read the cache
     instead of re-running the tokenize+explode."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
     in_slice = TX.hash15(F.col("doc_id").cast("string")) % LM_MOD == 0
-    key = _cache_key(spark, sf_dir, "bigram-lm")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
-        pc = (
-            bigr.filter(in_slice)
-            .groupBy("w1", "bg")
-            .agg(F.count(F.lit(1)).alias("c12"))
-            .persist()
+
+    def build() -> tuple:
+        pc = bigr.filter(in_slice).groupBy("w1", "bg").agg(
+            F.count(F.lit(1)).alias("c12")
         )
-        bigr_c = bigr.persist()
-        pc.count()
-        _SHINGLE_CACHE[key] = (pc, bigr_c)
-    else:
-        pc, bigr_c = cached
-    return pc, bigr_c
+        return pc, bigr
+
+    return memo(spark, sf_dir, "bigram-lm", build)
 
 
 def quality_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1358,16 +1350,7 @@ def collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
     )
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
-    key = _cache_key(spark, sf_dir, "pmi-pairs")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
-        pairs = pairs.persist()
-        pairs.count()
-        _SHINGLE_CACHE[key] = pairs
-    else:
-        pairs = cached
+    pairs = memo(spark, sf_dir, "pmi-pairs", lambda: pairs)
     surv = pairs.filter(F.col("c12") >= PMI_MIN_COUNT)
     # marginals restricted to surviving keys: c1(w1) >= c12 of any
     # surviving pair >= PMI_MIN_COUNT, so filtering the marginal tables

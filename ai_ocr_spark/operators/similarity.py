@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..functions import vectors as V
 
 N_QUERIES = 8          # query set: vec_id < 8
@@ -76,47 +77,35 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple:
     assignment cost is O(n*K) — picked by TakeOrderedAndProject (top-K,
     no full sort) and broadcast. Shared by ann_ivf_topk (exact-cosine
     rerank within lists) and ann_ivf_pq_topk (ADC within lists)."""
-    emb = _emb(spark, sf_dir)
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    key = _cache_key(spark, sf_dir, "ivf-index")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    cent_pick = F.md5(F.col("vec_id").cast("string").cast("binary"))
-    cent = (
-        emb.orderBy(cent_pick.asc(), F.col("vec_id").asc())
-        .limit(N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
+    def build() -> tuple:
+        emb = _emb(spark, sf_dir)
+        cent_pick = F.md5(F.col("vec_id").cast("string").cast("binary"))
+        cent = (
+            emb.orderBy(cent_pick.asc(), F.col("vec_id").asc())
+            .limit(N_CENTROIDS)
+            .select(
+                F.col("vec_id").alias("centroid_id"),
+                F.col("v").alias("cv"),
+                F.col("nrm").alias("cn"),
+            )
         )
-        .persist()
-    )
-    ccos = V.dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn"))
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.desc("ccos"), F.asc("centroid_id")
-    )
-    assigned = (
-        emb.repartition(par, F.col("vec_id"))
-        .crossJoin(F.broadcast(cent))
-        .select("vec_id", "v", "nrm", "centroid_id", ccos.alias("ccos"))
-        .withColumn("ark", F.row_number().over(aw))
-        .filter(F.col("ark") == 1)
-        .select("vec_id", "v", "nrm", "centroid_id")
-        .persist()
-    )
-    # materialize EAGERLY before memoizing: left lazy, the first cold
-    # action submits several join-input stages concurrently and each
-    # racing stage recomputes the unmaterialized blocks (CLAUDE.md,
-    # measured on dedup_incremental_lsh: cold wall 2.9s-17s lazy vs
-    # 2.45s +/- 0.02 eager)
-    cent.count()
-    assigned.count()
-    _SHINGLE_CACHE[key] = (cent, assigned)
-    return cent, assigned
+        ccos = V.dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn"))
+        par = max(spark.sparkContext.defaultParallelism, 8)
+        aw = Window.partitionBy("vec_id").orderBy(
+            F.desc("ccos"), F.asc("centroid_id")
+        )
+        assigned = (
+            emb.repartition(par, F.col("vec_id"))
+            .crossJoin(F.broadcast(cent))
+            .select("vec_id", "v", "nrm", "centroid_id", ccos.alias("ccos"))
+            .withColumn("ark", F.row_number().over(aw))
+            .filter(F.col("ark") == 1)
+            .select("vec_id", "v", "nrm", "centroid_id")
+        )
+        return cent, assigned
+
+    return memo(spark, sf_dir, "ivf-index", build)
 
 
 def _ivf_probes(emb: DataFrame, cent: DataFrame) -> DataFrame:
@@ -230,22 +219,16 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitioned to full width first (a single-split embeddings file
     serializes the whole signature pass on one task otherwise). At
     10^12 rows this is the signature table you would checkpoint."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
     emb = _emb(spark, sf_dir)
-    key = _cache_key(spark, sf_dir, "srp-sig")
-    sig = _SHINGLE_CACHE.get(key)
-    if sig is None:
+
+    def build() -> DataFrame:
         par = max(spark.sparkContext.defaultParallelism, 8)
-        sig = (
-            emb.repartition(par, F.col("vec_id"))
-            .select(
-                "vec_id",
-                F.posexplode(srp_signatures(F.col("v"))).alias("tbl", "sig"),
-            )
-            .persist()
+        return emb.repartition(par, F.col("vec_id")).select(
+            "vec_id",
+            F.posexplode(srp_signatures(F.col("v"))).alias("tbl", "sig"),
         )
-        _SHINGLE_CACHE[key] = sig
+
+    sig = memo(spark, sf_dir, "srp-sig", build)
     a, b = sig.alias("a"), sig.alias("b")
     cand = (
         a.join(
@@ -494,24 +477,18 @@ def _bq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors this 8-byte-per-vector index is the artifact you keep in
     executor memory (64x smaller than the float32 vectors, 10x smaller
     than the 80-bit PQ codes). Repartitioned to width first (the
-    single-split parquet footgun) and materialized eagerly (racing
-    cold stages recompute lazy memoized blocks, CLAUDE.md)."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
+    single-split parquet footgun)."""
 
-    key = _cache_key(spark, sf_dir, "bq-codes")
-    codes = _SHINGLE_CACHE.get(key)
-    if codes is None:
-        emb = _emb(spark, sf_dir)
+    def build() -> DataFrame:
         par = max(spark.sparkContext.defaultParallelism, 8)
         w0, w1 = _bq_words(F.col("v"))
-        codes = (
-            emb.repartition(par, F.col("vec_id"))
+        return (
+            _emb(spark, sf_dir)
+            .repartition(par, F.col("vec_id"))
             .select("vec_id", w0.alias("w0"), w1.alias("w1"))
-            .persist()
         )
-        codes.count()
-        _SHINGLE_CACHE[key] = codes
-    return codes
+
+    return memo(spark, sf_dir, "bq-codes", build)
 
 
 def ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -890,18 +867,18 @@ def _pq_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train the PQ codebooks: md5-sampled init + PQ_ROUNDS Lloyd
-    refinements per subspace, centroid state driver-side (M*K rows,
-    bounded — the embedding_kmeans pattern per 4-dim slice). Returns
-    the (m, cid, carr) codebook DataFrame, memoized per (session,
+    """The (m, cid, carr) codebook DataFrame, memoized per (session,
     sf_dir) like the IVF index: codebooks are trained once and probed
     many times."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
+    return memo(
+        spark, sf_dir, "pq-codebooks", lambda: _train_pq_codebooks(spark, sf_dir)
+    )
 
-    key = _cache_key(spark, sf_dir, "pq-codebooks")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _train_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train the PQ codebooks: md5-sampled init + PQ_ROUNDS Lloyd
+    refinements per subspace, centroid state driver-side (M*K rows,
+    bounded — the embedding_kmeans pattern per 4-dim slice)."""
     sub = _pq_sub(spark, sf_dir).persist()
     qarr = F.transform(
         F.col("sv"), lambda x: F.floor(x * EMB_SCALE).cast("long")
@@ -953,10 +930,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for p in sorted(sums[ck])
                 ]
     sub.unpersist()
-    cb = _cb_df().persist()
-    cb.count()
-    _SHINGLE_CACHE[key] = cb
-    return cb
+    return _cb_df()
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1163,27 +1137,20 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVFADC index frame (vec_id, centroid_id, m, cid): inverted
     lists whose entries are PQ codes — FAISS's IVFPQ storage layout.
-    Memoized+persisted per (session, sf_dir) and materialized eagerly
-    (lazy memoized persists race concurrent cold stages, CLAUDE.md).
+    Memoized per (session, sf_dir) through cache.memo.
     At 10^12 vectors this frame is what you write out partitioned by
     centroid_id: ~10 bytes of codes per entry instead of 256 bytes of
     floats, and a probe touches only its lists' partitions."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    key = _cache_key(spark, sf_dir, "ivfpq-lists")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _cent, assigned = _ivf_index(spark, sf_dir)
-    cb = _pq_codebooks(spark, sf_dir)
-    codes = _pq_assign(_pq_sub(spark, sf_dir), cb).select("vec_id", "m", "cid")
-    lists = (
-        codes.join(assigned.select("vec_id", "centroid_id"), "vec_id")
-        .persist()
-    )
-    lists.count()
-    _SHINGLE_CACHE[key] = lists
-    return lists
+    def build() -> DataFrame:
+        _cent, assigned = _ivf_index(spark, sf_dir)
+        cb = _pq_codebooks(spark, sf_dir)
+        codes = _pq_assign(_pq_sub(spark, sf_dir), cb).select(
+            "vec_id", "m", "cid"
+        )
+        return codes.join(assigned.select("vec_id", "centroid_id"), "vec_id")
+
+    return memo(spark, sf_dir, "ivfpq-lists", build)
 
 
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

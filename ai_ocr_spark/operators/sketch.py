@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..functions import text as TX
 
 KMV_K = 32
@@ -604,20 +605,18 @@ def sketch_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At 10^12 rows the exact join-back disappears and the sketch
     alone answers point queries; here the exact count is the witness.
     """
-    from .dedup import _SHINGLE_CACHE, _cache_key, _docs_wide
+    from .dedup import _docs_wide
 
     pos = lambda d: TX.hash15(F.concat(F.lit(f"{d}:"), F.col("token"))) % CMS_W
-    key = _cache_key(spark, sf_dir, "cms_counts")
-    counts = _SHINGLE_CACHE.get(key)
-    if counts is None:
-        counts = (
-            _docs_wide(spark, sf_dir)
-            .select(F.explode(TX.tokens(F.col("text"))).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .persist()
-        )
-        _SHINGLE_CACHE[key] = counts
+    counts = memo(
+        spark,
+        sf_dir,
+        "cms_counts",
+        lambda: _docs_wide(spark, sf_dir)
+        .select(F.explode(TX.tokens(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+    )
     lane_arr = F.array(
         *[
             F.struct(F.lit(d).alias("d"), pos(d).alias("w"))
@@ -904,26 +903,24 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity before re-processing (storage_service.py:48 content
     addressing); this is that gate as a constant-memory sketch.
     """
-    from .dedup import _SHINGLE_CACHE, _cache_key, _docs_wide, _is_new_doc
+    from .dedup import _docs_wide, _is_new_doc
 
     d = TX.md5_hex(TX.norm_text(F.col("text")))
-    key = _cache_key(spark, sf_dir, "bloom-table")
-    bloom = _SHINGLE_CACHE.get(key)
-    if bloom is None:
+
+    def build() -> DataFrame:
         base = _docs_wide(spark, sf_dir).filter(
             ~_is_new_doc(F.col("doc_id"))
         )
         pos, word, bitval = _bloom_cells(F.col("d"))
-        bloom = (
+        return (
             base.select(d.alias("d"))
             .select(pos)
             .select(word, bitval)
             .groupBy("word")
             .agg(F.bit_or("bitval").alias("bits"))
-            .persist()
         )
-        bloom.count()  # eager: lazily-persisted memoized frames race
-        _SHINGLE_CACHE[key] = bloom
+
+    bloom = memo(spark, sf_dir, "bloom-table", build)
     inc = _docs_wide(spark, sf_dir).filter(_is_new_doc(F.col("doc_id")))
     incf = inc.select("doc_id", d.alias("d"))
     pos, word, bitval = _bloom_cells(F.col("d"))
@@ -1011,61 +1008,50 @@ KMV_I_K = 256  # larger than KMV_K: intersection variance scales with
 
 def _kmv_sketch_parts(spark: SparkSession, sf_dir: str):
     """Shared KMV machinery for the set-algebra family: the memoized
-    distinct (source, h) shingle set `d` (eager _SHINGLE_CACHE persist
-    — it feeds many consumers per query and, unmemoized, each re-ran
-    the corpus explode+distinct off the one-split fixture scan: 6.3s
-    warm at sf0.1 -> 0.9s), the per-source `theta` frame
-    (k_seen, theta), and the retained samples `ret` (strictly below
-    the sketch's own theta — drops the kth element of a saturated
-    sketch)."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
+    distinct (source, h) shingle set `d` (memoized — it feeds many
+    consumers per query and, unmemoized, each re-ran the corpus
+    explode+distinct off the one-split fixture scan: 6.3s warm at
+    sf0.1 -> 0.9s), the per-source `theta` frame (k_seen, theta), and
+    the retained samples `ret` (strictly below the sketch's own theta —
+    drops the kth element of a saturated sketch). theta/ret are tiny
+    (|sources| and K·|sources| rows) but feed ~8 consumers per setops
+    query — left uncached each consumer re-ran the window chain
+    (setops 5.1s warm -> 2s). All three are ONE memo entry so
+    clear_caches unpersists them together."""
 
-    key = _cache_key(spark, sf_dir, "kmv-intersect-shingles")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par)
-    sh = docs.select(
-        "source",
-        F.explode(TX.word_shingles(TX.tokens(F.col("text")))).alias("sh"),
-    )
-    d = (
-        sh.select("source", TX.hash15(F.col("sh")).alias("h"))
-        .distinct()
-        .persist()
-    )
-    d.count()  # eager build (CLAUDE.md: lazy memoized persists race)
-    w = Window.partitionBy("source").orderBy(F.asc("h"))
-    topk = d.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= KMV_I_K
-    )
-    th = topk.groupBy("source").agg(
-        F.count(F.lit(1)).alias("k_seen"), F.max("h").alias("kth")
-    )
-    theta = th.select(
-        "source",
-        "k_seen",
-        F.when(F.col("k_seen") < KMV_I_K, F.lit(1 << 60))
-        .otherwise(F.col("kth"))
-        .cast("long")
-        .alias("theta"),
-    ).persist()
-    ret = (
-        topk.join(theta.select("source", "theta"), "source")
-        .filter(F.col("h") < F.col("theta"))
-        .select("source", "h")
-        .persist()
-    )
-    # theta/ret are tiny (|sources| and K·|sources| rows) but feed ~8
-    # consumers per setops query — left uncached each consumer re-ran
-    # the window chain (setops 5.1s warm -> 2s). Tupled into ONE cache
-    # entry so clear_caches unpersists all three together.
-    theta.count()
-    ret.count()
-    entry = (d, theta, ret)
-    _SHINGLE_CACHE[key] = entry
-    return entry
+    def build() -> tuple:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+            par
+        )
+        sh = docs.select(
+            "source",
+            F.explode(TX.word_shingles(TX.tokens(F.col("text")))).alias("sh"),
+        )
+        d = sh.select("source", TX.hash15(F.col("sh")).alias("h")).distinct()
+        w = Window.partitionBy("source").orderBy(F.asc("h"))
+        topk = d.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") <= KMV_I_K
+        )
+        th = topk.groupBy("source").agg(
+            F.count(F.lit(1)).alias("k_seen"), F.max("h").alias("kth")
+        )
+        theta = th.select(
+            "source",
+            "k_seen",
+            F.when(F.col("k_seen") < KMV_I_K, F.lit(1 << 60))
+            .otherwise(F.col("kth"))
+            .cast("long")
+            .alias("theta"),
+        )
+        ret = (
+            topk.join(theta.select("source", "theta"), "source")
+            .filter(F.col("h") < F.col("theta"))
+            .select("source", "h")
+        )
+        return d, theta, ret
+
+    return memo(spark, sf_dir, "kmv-intersect-shingles", build)
 
 
 
@@ -1106,8 +1092,6 @@ def sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketch_distinct_kmv) with the set-operation algebra the same
     sketch supports.
     """
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
     d, theta, ret = _kmv_sketch_parts(spark, sf_dir)
     # a sample in BOTH retained sets is < min(theta_a, theta_b)
     # automatically, so the intersect pair join needs no extra bound.

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..functions import text as TX
 
 BPE_TOP_K = 40
@@ -333,46 +334,40 @@ def _encoded_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver queries consuming this frame (tokenizer_bpe_encode and
     tokenizer_vocab_coverage) would otherwise EACH re-run the full
     BPE training loop and leak a fresh persisted copy."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    key = _cache_key(spark, sf_dir, "bpe-encoded")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached[-1]
-    merges = _train_merges(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tok = docs.select(
-        "doc_id", "lang", F.explode(TX.tokens(F.col("text"))).alias("w")
-    ).filter(F.col("w") != "")
-    dw = tok.groupBy("doc_id", "lang", "w").agg(F.count(F.lit(1)).alias("c"))
+    def build() -> tuple:
+        merges = _train_merges(spark, sf_dir)
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        tok = docs.select(
+            "doc_id", "lang", F.explode(TX.tokens(F.col("text"))).alias("w")
+        ).filter(F.col("w") != "")
+        dw = tok.groupBy("doc_id", "lang", "w").agg(F.count(F.lit(1)).alias("c"))
 
-    vocab = dw.groupBy("w").agg(F.sum("c").alias("n"))
-    sym = F.split(F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")), " ")
-    for _, left, right, _ in merges:
-        sym = _fold_merge(sym, left, right)
-    enc = vocab.select(
-        "w", "n", F.size(sym).cast("long").alias("ntok")
-    ).persist()
+        vocab = dw.groupBy("w").agg(F.sum("c").alias("n"))
+        sym = F.split(F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")), " ")
+        for _, left, right, _ in merges:
+            sym = _fold_merge(sym, left, right)
+        enc = vocab.select("w", "n", F.size(sym).cast("long").alias("ntok"))
 
-    # Zipf-skew split (the _skew_left_join shape, head keyed by corpus
-    # frequency): hot words broadcast, cold tail shuffles.
-    head = enc.orderBy(F.col("n").desc(), "w").limit(ENC_HEAD_K).select(
-        "w", "ntok"
-    )
-    with_head = dw.join(F.broadcast(head), "w", "left")
-    hot = with_head.filter(F.col("ntok").isNotNull())
-    cold = (
-        with_head.filter(F.col("ntok").isNull())
-        .drop("ntok")
-        .join(enc.select("w", "ntok"), "w", "left")
-    )
-    joined = hot.unionByName(cold).persist()
-    # Both persisted frames go in the cache tuple: a bare `enc` persist
-    # would survive clear_caches() and strand one copy per cold-bench
-    # cycle (enc must stay persisted while `joined` is alive — the
-    # skew-split tail join re-reads it on every consumer execution).
-    _SHINGLE_CACHE[key] = (enc, joined)
-    return joined
+        # Zipf-skew split (the _skew_left_join shape, head keyed by corpus
+        # frequency): hot words broadcast, cold tail shuffles.
+        head = enc.orderBy(F.col("n").desc(), "w").limit(ENC_HEAD_K).select(
+            "w", "ntok"
+        )
+        with_head = dw.join(F.broadcast(head), "w", "left")
+        hot = with_head.filter(F.col("ntok").isNotNull())
+        cold = (
+            with_head.filter(F.col("ntok").isNull())
+            .drop("ntok")
+            .join(enc.select("w", "ntok"), "w", "left")
+        )
+        # Both frames are memoized: a bare `enc` persist would survive
+        # clear_caches() and strand one copy per cold-bench cycle (enc
+        # must stay persisted while the joined frame is alive — the
+        # skew-split tail join re-reads it on every consumer execution).
+        return enc, hot.unionByName(cold)
+
+    return memo(spark, sf_dir, "bpe-encoded", build)[-1]
 
 
 def tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

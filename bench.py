@@ -326,7 +326,7 @@ def main() -> int:
     # each cache-backed operator, one timed run straight after
     # clear_caches() prices build + probe together, reported as
     # "<name>_cold" ALONGSIDE (not inside) the steady-state total.
-    from ai_ocr_spark.operators.dedup import clear_caches
+    from ai_ocr_spark.cache import clear_caches
 
     cold = {}
     for name in (

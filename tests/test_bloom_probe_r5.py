@@ -84,7 +84,7 @@ def test_bloom_bitmap_is_bounded_and_broadcast(spark):
     """The filter table must stay <= BLOOM_WORDS rows (constant-state
     mergeable sketch) and join the probe side as a broadcast — no
     corpus shuffle for membership, no cartesian anywhere."""
-    from ai_ocr_spark.operators.dedup import _SHINGLE_CACHE, _cache_key
+    from ai_ocr_spark.cache import _SHINGLE_CACHE, _cache_key
     from ai_ocr_spark.operators.sketch import BLOOM_WORDS, dedup_bloom_probe
 
     df = dedup_bloom_probe(spark, SF)

@@ -2,7 +2,7 @@
 SALSA's single-execution final auth chain keep the physical shapes the
 100-TB story depends on."""
 
-from ai_ocr_spark.operators.dedup import _SHINGLE_CACHE, _cache_key
+from ai_ocr_spark.cache import _SHINGLE_CACHE, _cache_key
 from ai_ocr_spark.operators.graph import (
     _graph_pins,
     graph_salsa,

@@ -9,6 +9,8 @@ leaves quiet days.
 
 import collections
 
+import pytest
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -77,6 +79,18 @@ def test_kcore_matches_python_replay(spark):
     # the core; every peeled node was flagged below k
     assert all(d >= KCORE_K for _, d, c in got.values() if c)
     assert all(d < KCORE_K for _, d, c in got.values() if not c)
+
+
+def test_kcore_raises_when_rounds_stop_short_of_fixpoint(spark, monkeypatch):
+    """A peel cut off before its fixpoint must raise, not return the
+    truncated core (the connected_components_labels rule)."""
+    from ai_ocr_spark.operators import graph
+
+    _, rounds = _python_kcore(spark)
+    assert rounds >= 1
+    monkeypatch.setattr(graph, "KCORE_ROUNDS", rounds - 1)
+    with pytest.raises(RuntimeError, match="k-core peel did not converge"):
+        graph.graph_kcore(spark, SF)
 
 
 def test_kcore_peel_rounds_monotone(spark):

@@ -1860,7 +1860,7 @@ def test_collocations_pmi_matches_python_bruteforce(spark):
 def test_collocations_pmi_topk_plan(spark):
     """Global top-K compiles to TakeOrderedAndProject (no global sort
     materializes the full scored frame)."""
-    from ai_ocr_spark.operators.dedup import clear_caches
+    from ai_ocr_spark.cache import clear_caches
     from ai_ocr_spark.operators.quality_lm import collocations_pmi
     from ai_ocr_spark.plans.audit import formatted_plan
 
