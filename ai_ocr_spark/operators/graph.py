@@ -886,8 +886,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     list (Σx = Σ(da+db), Σxy = 2Σ(da·db), Σx² = Σ(da²+db²)) — no
     orientation union materializes. At fixture scale every product
     stays far inside int64 (|num| ≈ 2·10^10 at sf0.1; 10^6·|num| ≈
-    2·10^16); past ~10^9 edges the sums graduate to DECIMAL(38,0),
-    same note as the k-means centroid sums.
+    2·10^16). The products 2M·Σxx and 10^6·|num| grow like E²·deg², so
+    extrapolating sf0.1 (~1.5·10^4 edges) they pass int64 somewhere
+    around 10^6–10^7 edges; before that scale the sums must graduate to
+    DECIMAL(38,0), same note as the k-means centroid sums.
 
     Scale shape: degree aggregate (map-side combined) + one edge⋈deg
     join per endpoint + a constant-state global sum. Nothing after the
