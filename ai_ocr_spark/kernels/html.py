@@ -42,6 +42,13 @@ CELL_TAGS = frozenset(("td", "th"))
 # Raw-text elements whose content is never document text.
 RAWTEXT_TAGS = frozenset("script style noscript template textarea".split())
 
+# The close tag that ends each raw-text element's content.
+_RAWTEXT_CLOSE_RE = {
+    t: re.compile(r"</" + t + r"\s*>", re.IGNORECASE) for t in RAWTEXT_TAGS
+}
+
+_TAG_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*")
+
 # Containers whose entire subtree is presumed boilerplate chrome.
 BOILER_CONTAINERS = frozenset("nav header footer aside form".split())
 
@@ -110,8 +117,6 @@ def decode_entities(s: str) -> str:
     return _ENTITY_RE.sub(_entity_sub, s)
 
 
-_WS_RE = re.compile(r"\s+")
-
 # attribute tokenizer: name = "..." | '...' | bare. Quoted values are
 # consumed atomically, so an 'href=' INSIDE another attribute's quoted
 # value can never be mistaken for the real href, and a data-href /
@@ -134,8 +139,11 @@ def _extract_href(tag_body: str) -> str | None:
 
 
 def collapse_ws(s: str) -> str:
-    """Canonical whitespace form: runs (incl. NBSP) -> one space, strip."""
-    return _WS_RE.sub(" ", s.replace("\xa0", " ")).strip()
+    """Canonical whitespace form: runs (incl. NBSP) -> one space, strip.
+
+    str.split() and the regex \\s both test Py_UNICODE_ISSPACE, so this
+    equals re.sub(r"\\s+", " ", s).strip() for every code point."""
+    return " ".join(s.split())
 
 
 # --- block arena ------------------------------------------------------------
@@ -223,20 +231,20 @@ class _Parser:
     def _flush(self) -> None:
         if not self.parts:
             return
-        raw = "".join(self.parts)
-        link_raw = "".join(
-            p for p, is_l in zip(self.parts, self.part_is_link) if is_l
-        )
-        self.parts.clear()
-        self.part_is_link.clear()
-        text = collapse_ws(decode_entities(raw))
+        parts, part_is_link = self.parts, self.part_is_link
+        text = collapse_ws(decode_entities("".join(parts)))
+        link_chars = 0
+        if text and True in part_is_link:
+            link_raw = "".join(p for p, is_l in zip(parts, part_is_link) if is_l)
+            link_chars = len(collapse_ws(decode_entities(link_raw)))
+        parts.clear()
+        part_is_link.clear()
         if not text:
             return
-        link_text = collapse_ws(decode_entities(link_raw))
         self.blocks.append(
             (
                 text,
-                len(link_text),
+                link_chars,
                 len(self.stack),
                 self.cur_tag,
                 self.boiler_depth > 0 or self.head_depth > 0,
@@ -320,8 +328,8 @@ class _Parser:
             self._row_end()
         elif name in CELL_TAGS:
             self._cell_end()
-        if name in CELL_TAGS and self.parts:
-            self._text(" ")
+            if self.parts:
+                self._text(" ")
         if name in BLOCK_TAGS:
             self._flush()
         # pop up to the matching open tag (tolerates misnesting)
@@ -338,14 +346,18 @@ class _Parser:
                 if top == name:
                     break
         if name in BLOCK_TAGS:
-            self.cur_tag = next(
-                (t for t in reversed(self.stack) if t in BLOCK_TAGS), "body"
-            )
+            for t in reversed(self.stack):
+                if t in BLOCK_TAGS:
+                    self.cur_tag = t
+                    break
+            else:
+                self.cur_tag = "body"
 
     def parse(self) -> BlockArena:
         html, n = self.html, self.n
         i = 0
         find = html.find
+        tag_name = _TAG_NAME_RE.match
         while i < n:
             lt = find("<", i)
             if lt == -1:
@@ -353,15 +365,13 @@ class _Parser:
                 break
             if lt > i:
                 self._text(html[i:lt])
-            # comment
-            if html.startswith("<!--", lt):
-                end = find("-->", lt + 4)
-                i = n if end == -1 else end + 3
-                continue
-            # doctype / CDATA / other markup declarations
             if lt + 1 < n and html[lt + 1] in "!?":
-                gt = find(">", lt)
-                i = n if gt == -1 else gt + 1
+                if html.startswith("<!--", lt):  # comment
+                    end = find("-->", lt + 4)
+                    i = n if end == -1 else end + 3
+                else:  # doctype / CDATA / other markup declarations
+                    gt = find(">", lt)
+                    i = n if gt == -1 else gt + 1
                 continue
             gt = find(">", lt)
             if gt == -1:  # truncated tag at EOF
@@ -381,7 +391,7 @@ class _Parser:
             self_closing = tag_body.endswith("/")
             if self_closing:
                 tag_body = tag_body[:-1]
-            m = re.match(r"[a-zA-Z][a-zA-Z0-9:-]*", tag_body)
+            m = tag_name(tag_body)
             if not m:
                 continue
             name = m.group(0).lower()
@@ -390,8 +400,7 @@ class _Parser:
                 continue
             if name in RAWTEXT_TAGS and not self_closing:
                 # skip raw content up to the matching close tag
-                close_re = re.compile(r"</" + name + r"\s*>", re.IGNORECASE)
-                cm = close_re.search(html, i)
+                cm = _RAWTEXT_CLOSE_RE[name].search(html, i)
                 i = n if cm is None else cm.end()
                 continue
             if name == "a":

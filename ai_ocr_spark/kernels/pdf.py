@@ -104,6 +104,7 @@ _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
 _KIDS_RE = re.compile(rb"/Kids\s*\[([^\]]*)\]")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
+_PAGE_TYPE_RE = re.compile(rb"/Type\s*/Page\b")
 
 
 @dataclass
@@ -143,6 +144,8 @@ def _decode_stream(obj_body: bytes) -> bytes | None:
     return data
 
 
+# one literal string operand, e.g. each (..) inside a TJ array
+_STRING_RE = re.compile(rb"\((?:[^()\\]|\\.)*\)")
 _TOKEN_RE = re.compile(
     rb"\((?:[^()\\]|\\.)*\)"  # string
     rb"|\[(?:[^\]\\]|\\.)*\]"  # array (TJ operand)
@@ -244,7 +247,7 @@ def _tokenize_content(
                 runs.append(GlyphRun(x, y, s))
         elif op == b"TJ" and pending_strings:
             arr = pending_strings[-1]
-            parts = re.findall(rb"\((?:[^()\\]|\\.)*\)", arr)
+            parts = _STRING_RE.findall(arr)
             s = "".join(_pdf_string(p) for p in parts)
             if s:
                 runs.append(GlyphRun(x, y, s))
@@ -277,7 +280,7 @@ def page_runs(pdf: bytes) -> list[list[GlyphRun]]:
     if not page_objs:
         page_objs = [
             n for n, b in sorted(objs.items())
-            if b"/Type" in b and re.search(rb"/Type\s*/Page\b", b)
+            if b"/Type" in b and _PAGE_TYPE_RE.search(b)
         ]
     pages: list[list[GlyphRun]] = []
     for pnum in page_objs:
