@@ -28,7 +28,7 @@ def compact_line(timings, total, sf, docs_per_sec) -> str:
     tail capture (BENCH_r04.json came back parsed:null when the r4 line
     overran it and lost its head, including "value"). A deterministic
     fallback chain trades per-query median precision for line budget —
-    the full-precision detail always lives in BENCH/HEADLINE_r5.json —
+    the full-precision detail always lives in BENCH/HEADLINE.json —
     and only the last-resort tier drops entries (slowest kept, metric
     says so). Pure function so tests can pin the budget without Spark.
     """
@@ -55,17 +55,17 @@ def compact_line(timings, total, sf, docs_per_sec) -> str:
         )
 
     for ndigits, metric in (
-        (2, "median warm wall sec; detail in BENCH/HEADLINE_r5.json"),
-        (1, "median warm wall sec; detail in BENCH/HEADLINE_r5.json"),
-        (1, "see BENCH/HEADLINE_r5.json"),
-        (None, "see BENCH/HEADLINE_r5.json"),
+        (2, "median warm wall sec; detail in BENCH/HEADLINE.json"),
+        (1, "median warm wall sec; detail in BENCH/HEADLINE.json"),
+        (1, "see BENCH/HEADLINE.json"),
+        (None, "see BENCH/HEADLINE.json"),
     ):
         line = _line(ndigits, metric, timings)
         if len(line) < 1900:
             return line
     top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:40])
     return _line(
-        None, "slowest 40 of all; full set in BENCH/HEADLINE_r5.json", top
+        None, "slowest 40 of all; full set in BENCH/HEADLINE.json", top
     )
 
 
@@ -115,210 +115,29 @@ def main() -> int:
     spread["pipeline_extract"] = [round(samples[0], 3), round(samples[2], 3)]
     docs_per_sec = n_docs / pipe_s if pipe_s > 0 else 0.0
 
-    # --- headline relational / training-data queries --------------------
-    headline = [
-        "q1_pricing_summary",
-        "join_customer_orders",
-        "join_anti_customers_without_orders",
-        "window_top3_events_per_user",
-        "events_daily_metrics",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_simhash",
-        "dedup_ngram_jaccard",
-        # dedup_embedding_cosine is deliberately NOT here: it is the
-        # O(n^2) exact ground-truth oracle for the LSH path, not a
-        # scale-shape query — benching it at full n would publish a
-        # nested-loop join as a headline number. The scale path is:
-        "dedup_embedding_lsh",
-        # r5: SemDeDup over the memoized IVF clusters (within-cluster
-        # pairs only — the scale-shaped semantic dedup)
-        "dedup_semdedup",
-        "dedup_substring_spans",
-        "decontam_ngram_overlap",
-        # r5: the fuzzy decontamination leg over the shared band index
-        "decontam_minhash",
-        # r5: the embedding decontamination leg (broadcast bench side)
-        "decontam_embedding",
-        "sample_domain_cap",
-        "dedup_lines_global",
-        "filter_bloom_blocklist",
-        "ann_cosine_topk",
-        "ann_ivf_topk",
-        # r5: binary sign-quantization ANN (integer Hamming scan over
-        # the memoized 8-byte code table + exact rerank)
-        "ann_hamming_topk",
-        "text_quality_scores",
-        # r5: integer-exact FK readability (scan-speed projection)
-        "text_readability",
-        "text_langid",
-        "text_pii_scrub",
-        "quality_filter_gopher",
-        # r5: the FineWeb line-structural filters (scan-speed)
-        "quality_filter_fineweb",
-        "url_canonicalize",
-        "join_asof_orders",
-        "range_join_event_pairs",
-        "sketch_distinct_kmv",
-        "sketch_distinct_hll",
-        "sketch_heavy_hitters_cms",
-        "sample_temperature_mix",
-        "dedup_incremental_lsh",
-        "agg_length_percentiles",
-        "search_keyword_topk",
-        "pagerank_link_graph",
-        # r5: SALSA hub/authority (two-sided co-partition pin)
-        "graph_salsa",
-        "sample_stratified_split",
-        "sample_pack_sequences",
-        "embedding_label_outliers",
-        "text_chunk_windows",
-        # r4 additions — each timed run re-invokes the query builder, so
-        # the driver-side iteration loops (bpe_train rounds, kmeans
-        # rounds) are INSIDE the timed section, not amortized away
-        "search_bm25_topk",
-        "quality_perplexity_unigram",
-        "quality_perplexity_bigram",
-        "quality_perplexity_kn",
-        "text_token_entropy",
-        "text_langid_ngram",
-        "tokenizer_bpe_pairs",
-        "tokenizer_bpe_train",
-        "tokenizer_bpe_encode",
-        "embedding_kmeans",
-        "ann_pq_topk",
-        "ann_ivf_recall",
-        "pipeline_metrics_report",
-        "mm_image_features",
-        # r5: perceptual image near-dup (decode + integer aHash + one
-        # hash-bucket shuffle)
-        "mm_image_ahash",
-        # r5: the OCR leg (glyph render -> container -> template match),
-        # the lexical-x-ANN fusion, and the IVFADC composition (coarse
-        # prune + ADC scoring over the probed lists' codes)
-        "mm_ocr_text",
-        "ann_rrf_hybrid",
-        "ann_ivf_pq_topk",
-        # r4b: the crawl loop's publish artifacts + the encoding scrub,
-        # the robots frontier gate and the re-crawl delta join
-        "pipeline_wet_roundtrip",
-        "anchor_text_index",
-        "text_fix_mojibake",
-        "filter_robots_gate",
-        "crawl_delta_report",
-        "warc_cdx_index",
-        "crawl_frontier_topk",
-        # r4c: the crawl loop's scheduling + discovery tail and the
-        # PSL/registrable-domain projection
-        "crawl_schedule_waves",
-        "sitemap_discover",
-        "url_domain_etld1",
-        # r4d: rank fusion over the two lexical rankers (runs both
-        # subplans inside the timed section — prices the full fusion),
-        # and the incremental index refresh (base build + increment
-        # probe + merged-stat serve all inside the timed section)
-        "search_rrf_fusion",
-        "search_index_refresh",
-        "sketch_quantiles_logbin",
-        # r5: positional retrieval over the memoized positional index —
-        # exact-phrase anchor join + in-window proximity pairs
-        "search_phrase_topk",
-        "search_proximity_topk",
-        # r5: snippet generation — phrase ranking + first-occurrence
-        # window + broadcast doc-store lookup, all inside the timed run
-        "search_snippet_topk",
-        # r5: PMI collocation mining over the one-scan bigram pair table
-        "collocations_pmi",
-        # r5: Dolma-style Bloom dedup membership — warm probes ride the
-        # memoized bit_or bitmap; the exact leg prices the FPR witness
-        "dedup_bloom_probe",
-        # r5: pseudo-relevance-feedback expansion — runs the BM25
-        # ranker inside the timed section, then the feedback-bounded
-        # term mining (prices the full two-pass PRF loop)
-        "search_query_expansion",
-        # r5: SymSpell deletion-neighborhood suggestion — prices the
-        # vocab aggregate + deletion-index build + candidate verify
-        "search_spell_suggest",
-        # r5: degree-oriented triangle closure over the cached
-        # orientation (wedge self-join exchange-free on the lo pin)
-        "graph_triangle_count",
-        # r5: HLL shard-merge witness — three map-side-combinable
-        # aggregations, constant state per source
-        "sketch_hll_merge_shards",
-        # r5: integer-exact Zipf exponent fit — one token shuffle,
-        # WindowGroupLimit top-64, constant-state per-source OLS
-        "text_zipf_fit",
-        # r5: per-doc TF-IDF keyphrases — shared tf shuffle, skew-split
-        # tf⋈df join-back, WindowGroupLimit top-5 per doc
-        "text_keyphrases",
-        # r5: trained-langid confusion matrix — langid plan + one
-        # 25-cell aggregate with map-side combine
-        "langid_eval_confusion",
-        # r5: prefix->top-K completion index — vocab-sized explode,
-        # WindowGroupLimit per prefix
-        "search_autocomplete",
-        # r5: MOSS winnowing fingerprints — zero-shuffle array plan,
-        # per-doc rightmost-min window selection
-        "text_winnow_fingerprints",
-        # r5: winnowing-fingerprint pair join — stop-fingerprint cap
-        # bounds every bucket's pair fan-out
-        "dedup_winnow_pairs",
-        # r5: in-degree power-law fit — pinned-edge aggregate, degree
-        # histogram, constant-state global OLS
-        "graph_degree_powerlaw",
-        # r5: shot-boundary detection — fused decoder mapInPandas,
-        # adjacent-frame SAD, no shuffle
-        "mm_video_scene_cut",
-        # r5: energy-VAD segmentation — fused decoder, windowed
-        # energies, rising-edge segments, no shuffle
-        "mm_audio_vad",
-        # r5: windowed conversion funnel — user-keyed chain, each step
-        # joins a user-dimension frame back to one filtered scan
-        "events_funnel",
-        # r5: weekly retention cohorts — two user-keyed aggregates,
-        # calendar-sized matrix
-        "events_retention",
-        # r5: event-type Markov transitions — one user-keyed lag
-        # window, types²-bounded matrix
-        "events_markov_transitions",
-        # r5 final batch: k-core peel (bounded localCheckpoint rounds
-        # over the pinned edge table), theta-sketch intersection
-        # (K-row sketches + the exact witness join), MAD anomaly rule
-        # (one calendar-sized count + tiny windows)
-        "graph_kcore",
-        "sketch_kmv_intersect",
-        "events_anomaly_mad",
-        # r5 final: RFM quintile rollup — one fact-table aggregate,
-        # customer-dim windows after
-        "rfm_customer_segments",
-        # r5 final: rational Newman assortativity (degree agg + two
-        # co-partitioned joins + constant-state sums) and the host
-        # rollup (two dim joins + one |hosts|²-bounded aggregate)
-        "graph_assortativity",
-        "graph_host_edges",
-        # r5 final: the streaming MAD twin — prices the 3-batch drain
-        # + the shared verdict suffix (batch==stream contract)
-        "stream_anomaly_mad",
-        # r5 final: personalized PageRank — the pagerank plan with a
-        # seed-gated teleport; same per-round exchange budget
-        "graph_ppr_seeds",
-        # r5 final: the theta-algebra completion over the shared
-        # memoized sketch parts (K-row pair frames + witness join)
-        "sketch_kmv_setops",
-    ]
-    qs = entrymod.queries()
-    missing = [n for n in headline if n not in qs]
-    if missing:  # fail loudly — a silent skip would shrink the total
-        raise KeyError(f"headline queries missing from queries(): {missing}")
-    for name in headline:
-        fn = qs[name]
+    # --- headline queries: the registry rows with a bench role ----------
+    # Each timed run re-invokes the builder, so driver-side iteration
+    # loops (BPE rounds, k-means rounds) are inside the timed section.
+    def role(*roles: str) -> list[str]:
+        return [n for n, op in entrymod.OPS.items() if op.bench in roles]
+
+    def time_into(out: dict[str, float], name: str) -> None:
+        fn = entrymod.OPS[name].builder
         samples = _timed_samples(lambda: _materialize(fn(spark, sf_dir)))
-        timings[name] = round(samples[1], 3)
+        out[name] = round(samples[1], 3)
         spread[name] = [round(samples[0], 3), round(samples[2], 3)]
 
+    for name in role("warm", "cold"):
+        time_into(timings, name)
     total = round(sum(timings.values()), 3)
 
-    # --- cold-build column (VERDICT r2 "What's wrong" #3) ---------------
+    # Streaming drains: mostly micro-batch startup, so they are timed in
+    # their own section and kept out of the batch total.
+    stream: dict[str, float] = {}
+    for name in role("stream"):
+        time_into(stream, name)
+
+    # --- cold-build column ----------------------------------------------
     # The steady-state numbers above price the PROBE with the memoized
     # persisted intermediates (shingle/digest/SRP-signature/IVF-index
     # tables) already hot — defensible because an index is built once
@@ -329,56 +148,10 @@ def main() -> int:
     from ai_ocr_spark.cache import clear_caches
 
     cold = {}
-    for name in (
-        "dedup_minhash_lsh",
-        "dedup_incremental_lsh",
-        "dedup_simhash",
-        "dedup_ngram_jaccard",
-        "dedup_embedding_lsh",
-        "dedup_substring_spans",
-        "ann_ivf_topk",
-        "ann_pq_topk",
-        # ivfpq cold prices all three builds: IVF index + PQ codebooks
-        # + the code-carrying inverted lists
-        "ann_ivf_pq_topk",
-        # r5: BQ cold prices the sign-code table build + Hamming scan
-        "ann_hamming_topk",
-        # r5: semdedup cold prices the IVF index build + the
-        # within-cluster pair pass
-        "dedup_semdedup",
-        "filter_bloom_blocklist",
-        "sketch_heavy_hitters_cms",
-        # r4d memoized indexes: shared ranker postings + corpus stats,
-        # the incremental-refresh base postings, the encoded BPE
-        # vocabulary, the first-occurrence line index, the LID doc
-        # profiles — cold prices each build + first probe honestly
-        "search_rrf_fusion",
-        "search_index_refresh",
-        "tokenizer_bpe_encode",
-        "dedup_lines_global",
-        "text_langid_ngram",
-        # r5: salsa cold prices the pinned two-sided edge index + the
-        # full auth power-iteration chain (warm probes recompute only
-        # the final hub half-step off the cached auth vector)
-        "graph_salsa",
-        # r5: phrase cold prices the positional-postings index build
-        # (shared with search_proximity_topk) + the anchor-join probe
-        "search_phrase_topk",
-        # r5: pmi cold prices the bigram pair-table build + the
-        # marginal joins and top-K
-        "collocations_pmi",
-        # r5: bloom cold prices the bit_or bitmap build + first probe
-        "dedup_bloom_probe",
-        # r5: winnow-pairs cold prices the fingerprint posting index
-        # build (the full k-gram winnowing chain) + the pair join
-        "dedup_winnow_pairs",
-        # r5 final: intersect cold prices the distinct (source, h)
-        # shingle-set build + the sketch pairing and exact witness
-        "sketch_kmv_intersect",
-    ):
+    for name in role("cold"):
         clear_caches(spark)
         t0 = time.monotonic()
-        _materialize(qs[name](spark, sf_dir))
+        _materialize(entrymod.OPS[name].builder(spark, sf_dir))
         cold[f"{name}_cold"] = round(time.monotonic() - t0, 3)
     clear_caches(spark)
 
@@ -389,28 +162,31 @@ def main() -> int:
     # lost its head, including "value"). The stdout line therefore stays
     # COMPACT and asserted < 1900 chars: short metric, median-only
     # queries dict, tight separators. Spread, cold column, n_docs, cpus
-    # and the full methodology note live in BENCH/HEADLINE_r5.json,
-    # written here and committed in-repo for the judge.
+    # and the full methodology note live in BENCH/HEADLINE.json,
+    # written here and committed in-repo.
     detail = {
         "metric": (
             "total steady-state headline query wall time, per-query MEDIAN"
             " of 3 warm runs (spread = [min,max] per query), memoized index"
             " tables hot (flagship: fused extraction pipeline docs/sec at"
             " the median); queries_cold = same op timed once immediately"
-            " after clear_caches, pricing index build + probe"
+            " after clear_caches, pricing index build + probe;"
+            " queries_stream = streaming drains, same protocol, outside"
+            " the total"
         ),
         "value": total,
         "unit": "sec",
         "queries": timings,
         "spread": spread,
         "queries_cold": cold,
+        "queries_stream": stream,
         "sf": sf,
         "docs_per_sec": round(docs_per_sec, 2),
         "n_docs": n_docs,
         "cpus": cpus,
     }
     detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "HEADLINE_r5.json"
+        os.path.dirname(os.path.abspath(__file__)), "BENCH", "HEADLINE.json"
     )
     try:
         with open(detail_path, "w") as f:

@@ -1,7 +1,13 @@
 """Driver-contract hygiene: the exact invariants the round driver's
 correctness gate depends on."""
 
+import ast
+import pathlib
+
 import __spark_entry__ as em
+from ai_ocr_spark.parity import TABLES
+
+ROOT = pathlib.Path(em.__file__).parent
 
 
 def test_every_oracle_key_has_a_query():
@@ -35,15 +41,24 @@ def test_oracle_sql_strings_are_wellformed():
     without the full data compare."""
     import duckdb
 
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
     con = duckdb.connect()
-    for t in tables:
+    for t in TABLES:
         con.execute(
             f"CREATE TABLE {t} AS "
             f"SELECT * FROM '/root/testdata/sf0.001/{t}.parquet' LIMIT 0"
         )
     for name, sql in em.oracle_sql().items():
         con.execute(sql)  # raises on syntax/semantic errors
+
+
+def test_registry_is_the_only_operator_list():
+    """bench.py and tools/ derive their operator sets from OPS; a
+    hand-kept list there would drift from the registry unnoticed."""
+    names = set(em.OPS)
+    offenders = [
+        f"{path.relative_to(ROOT)}:{node.lineno}: {node.value}"
+        for path in [ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value in names
+    ]
+    assert not offenders, offenders
