@@ -393,8 +393,8 @@ OPS: dict[str, Op] = {
         RT.catalog_compact_roundtrip, RT.COMPACT_ORACLE_SQL
     ),
     # the north rule's lineage/metrics table value-checked: metrics
-    # re-keyed on the deterministic size-bucket half of the skew
-    # key x content kind, two injected fault families
+    # keyed on the log2 payload-size bucket x content kind, two
+    # injected fault families
     "pipeline_metrics_report": Op(
         RT.pipeline_metrics_report, RT.METRICS_REPORT_ORACLE_SQL, "warm"
     ),

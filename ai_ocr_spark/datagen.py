@@ -13,7 +13,7 @@ Payload families (FIXTURES.md §2-5): invoice/report/form HTML wrapped in
 boilerplate chrome, CSV product catalogs, multi-page PDFs (own emitter),
 Japanese pages, plain text, empty, truncated-HTML and binary-junk
 malformed docs. Domains are Zipf-skewed and sizes heavy-tailed to
-exercise the salted/size-bucketed repartition (north_rule skew axis).
+exercise the size-dealt repartition (north_rule skew axis).
 """
 
 from __future__ import annotations

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..pipeline import extract_pages
 
 N_ORDERS = 50  # first N orderkeys make one synthetic page each
+SIZE_BUCKETS = 8  # log2 payload-size buckets pipeline_metrics_report keys on
 
 
 def _order_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,7 +273,7 @@ def pipeline_domain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     first 2000 chars, kernels/fields.py language_of), so the rollup
     value-checks the kernel composition end to end.
 
-    Scale shape: scan -> one salted/size-bucketed exchange -> ONE
+    Scale shape: scan -> one size-dealt exchange -> ONE
     MapInPandas -> partial+final hash aggregate on the domain key. The
     aggregate input is already the narrow projection (binary column
     pruned before the kernel's output leaves the stage).
@@ -321,9 +322,9 @@ def pipeline_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused extraction over pages with two DETERMINISTIC fault families
     (doc_id % 13 == 0 -> empty payload, doc_id % 17 == 0 -> a payload
     undecodable in both utf-8 and cp932, so the sniffer lands on
-    'binary') and roll the metrics up on the deterministic half of the
-    skew key — the log2 payload-size bucket skew_repartition mixes into
-    the shuffle key — crossed with the sniffed content kind.
+    'binary') and roll the metrics up on a deterministic key — the
+    log2 payload-size bucket, folded into SIZE_BUCKETS buckets —
+    crossed with the sniffed content kind.
 
     This is `pipeline.metrics_of` minus the two columns no cross-engine
     twin can reconstruct (partition_id is task placement, wall_ms is a
@@ -338,7 +339,7 @@ def pipeline_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(log2(x)) == length(bin(x)) - 1 (exact integer arithmetic on
     both engines) rather than double log2.
     """
-    from ..pipeline import SIZE_BUCKETS, doc_page_exprs, extract_pages
+    from ..pipeline import doc_page_exprs, extract_pages
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     url, warc_ts, html_ok = doc_page_exprs()  # the pipeline's page shape
@@ -381,7 +382,6 @@ def pipeline_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _metrics_report_oracle_sql() -> str:
     from ..pipeline import _CHROME_FOOT, _DOC_CHROME_HEAD, KERNEL_VERSION
-    from ..pipeline import SIZE_BUCKETS
 
     chrome = len(_DOC_CHROME_HEAD) + len("<article><p>") + len(
         "</p></article>"

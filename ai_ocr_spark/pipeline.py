@@ -4,7 +4,7 @@ One lazy DataFrame plan (SURVEY.md §3 E1 Spark equivalent):
 
     read pages
       -> anti-join against committed urls (idempotent resume, J5)
-      -> salted/size-bucketed repartition (explicit skew handling)
+      -> size-dealt repartition (explicit skew handling)
       -> ONE mapInPandas stage fusing parse+extract+validate kernels
          (crosses the JVM<->Python Arrow boundary exactly once)
       -> snapshot-atomic append + per-partition metrics
@@ -16,12 +16,14 @@ per partition.
 
 from __future__ import annotations
 
+import gc
 import sys
 import time
 import zipimport
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+from pyspark import TaskContext
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -156,29 +158,42 @@ METRICS_SCHEMA = T.StructType(
 # UDF-heavy map stage)
 # ---------------------------------------------------------------------------
 
-DOMAIN_SALTS = 16  # hot domains spread across this many partitions
-SIZE_BUCKETS = 8  # log2 payload-size buckets mixed into the shuffle key
+TASKS_PER_CORE = 2  # fused-stage tasks per core: the cap on num_partitions
 
 
 def skew_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Salted repartition on domain-hash + size bucket.
+    """Deal pages to min(num_partitions, TASKS_PER_CORE x cores)
+    partitions, balanced by payload bytes.
 
-    Key = xxhash64(domain, salt, size_bucket) where
-      * domain groups pages for cheap per-domain locality,
-      * salt = xxhash64(url) % DOMAIN_SALTS splits hot (Zipf-head) domains
-        across DOMAIN_SALTS partitions,
-      * size_bucket = log2-bucketed payload length so multi-MB pages
-        scatter instead of stacking in one straggler partition.
+    Each input partition sorts its rows by payload length (largest
+    first, url breaking ties) and deals them snake-wise: round 0 goes
+    to partitions 0..n-1, round 1 to n-1..0, and so on, so every
+    partition gets one row from each size rank. The deal starts at an
+    offset of the input partition's index, so small input partitions
+    do not all fill partition 0 first. A hot domain's pages spread
+    like any others, since the deal ignores the url beyond the tie.
 
-    All JVM-side expressions — no Python in the hot path.
+    The task count is capped because each Python task has a fixed cost
+    (worker hand-off, the daemon's gc.collect, pyspark's per-task
+    import-cache reset); once tasks are balanced by bytes, more of them
+    only add that cost. On 4 cores the fused pass ran fastest near two
+    tasks per core.
+
+    All JVM-side expressions, and no work beyond each input partition:
+    no global window, no sampling job, no Python.
     """
-    domain = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(DOMAIN_SALTS))
-    size_bucket = F.pmod(
-        F.floor(F.log2(F.length(F.col("html")).cast("double") + F.lit(2.0))),
-        F.lit(SIZE_BUCKETS),
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    n = min(num_partitions, TASKS_PER_CORE * cores)
+    # monotonically_increasing_id() is (partition index << 33) + row index;
+    # this turns it into row index + partition index
+    slot = F.monotonically_increasing_id() - F.spark_partition_id() * ((1 << 33) - 1)
+    turn = F.pmod(F.col("_slot"), F.lit(2 * n))
+    return (
+        df.sortWithinPartitions(F.length("html").desc(), "url")
+        .withColumn("_slot", slot)
+        .repartitionById(n, F.least(turn, F.lit(2 * n - 1) - turn).cast("int"))
+        .drop("_slot")
     )
-    return df.repartition(num_partitions, F.xxhash64(domain, salt, size_bucket))
 
 
 # ---------------------------------------------------------------------------
@@ -186,21 +201,31 @@ def skew_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _drop_zip_finders() -> None:
-    """Delete every zipimporter from sys.path_importer_cache.
+def _task_prologue() -> None:
+    """Prepare a Python worker for the task about to run; call it first
+    in a task's function.
 
-    Spark puts its jar and pyspark.zip on the workers' sys.path, and
-    pyspark calls importlib.invalidate_caches() at the start of every
-    task. On CPython 3.11 each cached zipimporter then re-reads its
-    archive's whole central directory: 26,672 entries, ~250 ms per task
-    on a 4-core host, before the UDF starts. Python rebuilds a deleted
-    finder from sys.path_hooks when an import next needs it, and workers
-    are reused, so every later task's invalidate_caches() is nearly free.
-    Call it first in a task's function; it also drops any finder a lazy
-    import brought back."""
+    1. Delete every zipimporter from sys.path_importer_cache. Spark puts
+       its jar and pyspark.zip on the workers' sys.path, and pyspark
+       calls importlib.invalidate_caches() at the start of every task.
+       On CPython 3.11 each cached zipimporter then re-reads its
+       archive's whole central directory: 26,672 entries, ~250 ms per
+       task on a 4-core host, before the UDF starts. Python rebuilds a
+       deleted finder from sys.path_hooks when an import next needs it,
+       and workers are reused, so every later task's invalidate_caches()
+       is nearly free. This also drops any finder a lazy import brought
+       back.
+    2. Inside a Spark task only, gc.freeze() the heap. pyspark's daemon
+       runs a full gc.collect() after every task on a reused worker, and
+       it walked the ~75k objects pandas, pyarrow and the kernels leave
+       alive (20-110 ms a call). Frozen objects are skipped; what a task
+       allocates after the freeze is still collected. In-process callers
+       (tests, single-process passes) keep an unfrozen heap."""
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del sys.path_importer_cache[path]
+    if TaskContext.get() is not None:
+        gc.freeze()
 
 
 def _extract_batches(run_id: str):
@@ -211,9 +236,8 @@ def _extract_batches(run_id: str):
     langchain_extractor.py:143-181)."""
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        _drop_zip_finders()
+        _task_prologue()
         import pandas as pd
-        from pyspark import TaskContext
 
         from ai_ocr_spark.kernels.oracle import extract_one
 
@@ -286,7 +310,11 @@ def _extract_batches(run_id: str):
 def extract_pages(
     df: DataFrame, run_id: str = "run-0", num_partitions: int | None = None
 ) -> DataFrame:
-    """pages DataFrame -> extractions DataFrame (lazy)."""
+    """pages DataFrame -> extractions DataFrame (lazy).
+
+    num_partitions is an upper bound: skew_repartition runs
+    min(num_partitions, TASKS_PER_CORE x cores) tasks. None keeps the
+    input's partitioning."""
     if num_partitions:
         df = skew_repartition(df, num_partitions)
     return df.select("url", "warc_ts", "html").mapInPandas(
@@ -322,7 +350,7 @@ def run_extraction_job(
     """The whole flagship path as one idempotent job:
 
         read pages -> anti-join committed urls (resume, J5)
-                   -> salted/size-bucketed repartition
+                   -> size-dealt repartition
                    -> fused kernel stage
                    -> snapshot-atomic append (extractions + metrics)
 
@@ -354,9 +382,11 @@ def run_extraction_job(
     try:
         pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_path)
         pending = extractions.pending(spark, pages)
-        if num_partitions is None:
-            num_partitions = max(sc.defaultParallelism * 2, 8)
-        out = extract_pages(pending, run_id=run_id, num_partitions=num_partitions)
+        out = extract_pages(
+            pending,
+            run_id=run_id,
+            num_partitions=num_partitions or TASKS_PER_CORE * sc.defaultParallelism,
+        )
         # ONE pass over the input: extract+write, then decide from the
         # written snapshot (an isEmpty() pre-check would run the scan and
         # the anti-join twice — a full extra pass at 10^12 rows)

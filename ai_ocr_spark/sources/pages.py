@@ -71,12 +71,12 @@ def pages_from_warc(spark: SparkSession, glob_path: str) -> DataFrame:
     """
     from collections.abc import Iterator
 
-    from ..pipeline import PAGES_SCHEMA, _drop_zip_finders
+    from ..pipeline import PAGES_SCHEMA, _task_prologue
 
     raw = spark.read.format("binaryFile").load(glob_path).select("path", "content")
 
     def explode_records(batches: Iterator) -> Iterator:
-        _drop_zip_finders()
+        _task_prologue()
         import gzip
         import io
         import zlib

@@ -26,47 +26,36 @@ def _materialize(df) -> None:
 def compact_line(timings, total, sf, docs_per_sec) -> str:
     """The one stdout JSON line, guaranteed under the driver's 2000-char
     tail capture (BENCH_r04.json came back parsed:null when the r4 line
-    overran it and lost its head, including "value"). A deterministic
-    fallback chain trades per-query median precision for line budget —
-    the full-precision detail always lives in BENCH/HEADLINE.json —
-    and only the last-resort tier drops entries (slowest kept, metric
-    says so). Pure function so tests can pin the budget without Spark.
+    overran it and lost its head, including "value"). The full line if
+    it fits; otherwise the largest slowest-K set of queries that fits,
+    and the metric says so. Medians keep two decimals either way — the
+    full set always lives in BENCH/HEADLINE.json. Pure function so tests
+    can pin the budget without Spark.
     """
 
-    def _line(ndigits, metric, qdict):
-        # ndigits=None -> whole seconds as ints (round(v, 0) still
-        # prints "1.0", which saves nothing — the r5 line outgrew the
-        # float tiers when the query list passed ~75 entries)
-        vals = (
-            {k: int(round(v)) for k, v in qdict.items()}
-            if ndigits is None
-            else {k: round(v, ndigits) for k, v in qdict.items()}
-        )
+    def _line(metric, qdict):
         return json.dumps(
             {
                 "metric": metric,
                 "value": total,
                 "unit": "sec",
-                "queries": vals,
+                "queries": {k: round(v, 2) for k, v in qdict.items()},
                 "sf": sf,
                 "docs_per_sec": round(docs_per_sec, 2),
             },
             separators=(",", ":"),
         )
 
-    for ndigits, metric in (
-        (2, "median warm wall sec; detail in BENCH/HEADLINE.json"),
-        (1, "median warm wall sec; detail in BENCH/HEADLINE.json"),
-        (1, "see BENCH/HEADLINE.json"),
-        (None, "see BENCH/HEADLINE.json"),
-    ):
-        line = _line(ndigits, metric, timings)
-        if len(line) < 1900:
-            return line
-    top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:40])
-    return _line(
-        None, "slowest 40 of all; full set in BENCH/HEADLINE.json", top
-    )
+    line = _line("median warm wall sec; detail in BENCH/HEADLINE.json", timings)
+    slowest = sorted(timings.items(), key=lambda kv: -kv[1])
+    k = len(slowest)
+    while len(line) >= 1900:
+        k -= 1
+        line = _line(
+            f"slowest {k} of {len(slowest)}; full set in BENCH/HEADLINE.json",
+            dict(slowest[:k]),
+        )
+    return line
 
 
 def main() -> int:

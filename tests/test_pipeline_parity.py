@@ -108,6 +108,35 @@ def test_skew_repartition_spreads_hot_domain(spark, pages_parquet):
     assert head["n_parts"] > 1  # and is salted across partitions
 
 
+def test_skew_repartition_deals_two_byte_balanced_tasks_per_core(spark, tmp_path):
+    """num_partitions is a cap: the deal runs TASKS_PER_CORE x cores
+    partitions, loses and repeats no page, and evens out payload bytes
+    across a heavy-tailed Zipf page mix."""
+    import statistics
+
+    from pyspark.sql import functions as F
+
+    from ai_ocr_spark.datagen import write_pages_parquet
+    from ai_ocr_spark.pipeline import skew_repartition
+
+    path = str(tmp_path / "pages.parquet")
+    write_pages_parquet(path, 2000, seed=3)  # make_page(i, 3), i < 2,000
+    dealt = skew_repartition(spark.read.parquet(path), 64)
+    n = 2 * spark.sparkContext.defaultParallelism
+    assert dealt.rdd.getNumPartitions() == n
+
+    rows = dealt.select(
+        "url", F.spark_partition_id().alias("p"), F.length("html").alias("b")
+    ).collect()
+    urls = [r["url"] for r in rows]
+    assert len(urls) == len(set(urls)) == 2000
+
+    per_part = [0] * n
+    for r in rows:
+        per_part[r["p"]] += r["b"]
+    assert max(per_part) / statistics.median(per_part) <= 1.1, per_part
+
+
 def test_pages_from_documents_inverse(spark):
     """strip(wrap(text)) == collapse_ws(text) — the oracle invariant the
     driver checks at sf0.01."""

@@ -21,7 +21,7 @@ def test_pipeline_crosses_python_boundary_exactly_once(spark, pages_parquet):
 
 
 def test_pipeline_has_exactly_one_shuffle(spark, pages_parquet):
-    """The only exchange is the explicit salted/size-bucketed
+    """The only exchange is the explicit size-dealt
     repartition — no accidental extra shuffles around the kernel stage."""
     pages = spark.read.parquet(pages_parquet)
     out = extract_pages(pages, run_id="plan", num_partitions=8)

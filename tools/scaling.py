@@ -7,12 +7,13 @@ Arrow batch size. Reports docs/s at both and
 
     eff = (throughput_4N / throughput_N) / 4
 
-plus the skew experiment: salted/size-bucketed repartition (the engine's
-policy) vs naive domain-hash repartition on the same Zipf-skewed input.
+plus the skew experiment: the size-dealt repartition (the engine's
+policy) vs naive domain-hash repartition on the same Zipf-skewed input,
+both at the engine's task count (TASKS_PER_CORE x cores).
 
 Usage:
     python tools/scaling.py            # full run, writes BENCH/BASELINE.md
-    python tools/scaling.py --worker --cpus 8 --pages P --mode salted
+    python tools/scaling.py --worker --cpus 8 --pages P --mode dealt
                                        # one timed measurement (subprocess)
 """
 
@@ -28,14 +29,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_DOCS = 200_000
-SHUFFLE_PARTITIONS = 128  # fixed across levels; fine tasks shrink the straggler tail
+# fixed across levels; skew_repartition caps the fused stage at
+# TASKS_PER_CORE x cores, so it runs 2*cpus tasks, not 128
+SHUFFLE_PARTITIONS = 128
 PAGES = "/tmp/scaling_pages.parquet"
 
 
 def worker(cpus: int, pages: str, mode: str) -> None:
     from pyspark.sql import functions as F
 
-    from ai_ocr_spark.pipeline import extract_pages
+    from ai_ocr_spark.pipeline import TASKS_PER_CORE, extract_pages
     from ai_ocr_spark.session import get_spark
 
     spark = get_spark(
@@ -47,13 +50,13 @@ def worker(cpus: int, pages: str, mode: str) -> None:
     n = df.count()
 
     def job():
-        if mode == "salted":
+        if mode == "dealt":
             # engine policy: skew_repartition inside extract_pages
             return extract_pages(df, run_id="scaling", num_partitions=SHUFFLE_PARTITIONS)
-        # naive: hash-partition on bare domain — Zipf-head domains pile
-        # into single partitions and straggle
+        # naive: hash-partition on bare domain at the same task count —
+        # Zipf-head domains pile into single partitions and straggle
         domain = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
-        d = df.repartition(SHUFFLE_PARTITIONS, domain)
+        d = df.repartition(TASKS_PER_CORE * cpus, domain)
         return extract_pages(d, run_id="scaling", num_partitions=None)
 
     # warmup (JVM + Python worker pool)
@@ -131,7 +134,7 @@ def main() -> int:
     ap.add_argument("--worker", action="store_true")
     ap.add_argument("--cpus", type=int, default=8)
     ap.add_argument("--pages", default=PAGES)
-    ap.add_argument("--mode", default="salted")
+    ap.add_argument("--mode", default="dealt")
     ap.add_argument("--n-docs", type=int, default=N_DOCS)
     args = ap.parse_args()
 
@@ -154,9 +157,9 @@ def main() -> int:
           f"= {SHUFFLE_PARTITIONS}, Arrow batch fixed by session.py):", flush=True)
     ceil = host_ceiling()
     ceil_eff = ceil["eff_8_32"]
-    r2 = run_one(2, "salted", trials=3)
-    r8 = run_one(8, "salted", trials=3)
-    r32 = run_one(32, "salted")
+    r2 = run_one(2, "dealt", trials=3)
+    r8 = run_one(8, "dealt", trials=3)
+    r32 = run_one(32, "dealt")
     # skew comparison in the host-linear 8-core regime (at 32-wide
     # saturation the host's own throttling swamps the partitioning
     # signal on bad days), median-of-3 like the primary measurement
@@ -202,18 +205,19 @@ normalized engine efficiency is {eff_8_32:.3f}/{ceil_eff:.2f} =
 | local[8]   | {r8['wall_s']:.1f} | {r8['docs_per_sec']:.0f} |
 | local[32]  | {r32['wall_s']:.1f} | {r32['docs_per_sec']:.0f} |
 
-## Skew handling (salted/size-bucketed vs naive domain hash, local[8],
+## Skew handling (size deal vs naive domain hash, local[8], 16 tasks,
 median of 3 trials)
 
 | partitioning | wall s (median) | trials | docs/s |
 |---|---|---|---|
-| salted + size-bucketed (engine policy) | {r8['wall_s']:.1f} | {[round(w, 1) for w in r8['trials']]} | {r8['docs_per_sec']:.0f} |
+| size deal (engine policy)              | {r8['wall_s']:.1f} | {[round(w, 1) for w in r8['trials']]} | {r8['docs_per_sec']:.0f} |
 | naive domain hash                      | {naive8['wall_s']:.1f} | {[round(w, 1) for w in naive8['trials']]} | {naive8['docs_per_sec']:.0f} |
 
-Salted/size-bucketed repartition (`pipeline.skew_repartition`:
-xxhash64(domain, salt, log2-size-bucket)) spreads Zipf-head domains and
-multi-hundred-KB pages across partitions; the naive domain hash stacks
-them into straggler partitions.
+The size deal (`pipeline.skew_repartition`: each input partition sorts
+by payload length and deals its rows snake-wise with `repartitionById`)
+gives every task one page of each size rank, so Zipf-head domains and
+multi-hundred-KB pages spread evenly; the naive domain hash stacks them
+into straggler partitions.
 
 ## Reference comparison
 
